@@ -15,50 +15,26 @@ from __future__ import annotations
 from . import registry
 from .session import get_session  # noqa: F401
 
-# Import operator modules for their registration side effects.
-from .operators import aggregations  # noqa: F401,E402
-
-_OPTIONAL_MODULES = [
-    "smart_water_management_spark.operators.joins",
-    "smart_water_management_spark.operators.windows",
-    "smart_water_management_spark.operators.relational",
-    "smart_water_management_spark.operators.skew",
-    "smart_water_management_spark.llmdata.components",
-    "smart_water_management_spark.functions.scalar",
-    "smart_water_management_spark.functions.udfs",
-    "smart_water_management_spark.sources.io_ops",
-    "smart_water_management_spark.plans.scd",
-    "smart_water_management_spark.plans.mv",
-    "smart_water_management_spark.plans.pipeline",
-    "smart_water_management_spark.streaming.ingest",
-    "smart_water_management_spark.plans.dashboard",
-    "smart_water_management_spark.plans.star_schema",
-    "smart_water_management_spark.validation.checks",
-    "smart_water_management_spark.streaming.batch_windows",
-    "smart_water_management_spark.streaming.jobs",
-    "smart_water_management_spark.ml.analytics",
-    "smart_water_management_spark.llmdata.dedup",
-    "smart_water_management_spark.llmdata.similarity",
-    "smart_water_management_spark.llmdata.text",
-    "smart_water_management_spark.llmdata.multimodal",
-    "smart_water_management_spark.llmdata.curation",
-]
-
-import importlib as _importlib
-
-# Names of optional modules that failed to import this process — consumed
-# by driver_window to distinguish "target's module absent" (skip the
-# alias) from "typo'd target" (fail fast).
-_FAILED_OPTIONAL: list[str] = []
-
-for _m in _OPTIONAL_MODULES:
-    try:
-        _importlib.import_module(_m)
-    except ModuleNotFoundError:
-        _FAILED_OPTIONAL.append(_m)  # module not built yet; registry stays partial
+# Import operator modules for their registration side effects. Each
+# streaming twin binds its batch query's oracle when it registers, so the
+# batch modules import before ``streaming.jobs`` (which itself imports the
+# llmdata modules it shares helpers with). A module that fails to import
+# fails the package import: the registry is never silently partial.
+from .operators import aggregations, joins, windows, relational, skew  # noqa: F401
+from .llmdata import components  # noqa: F401
+from .functions import scalar, udfs  # noqa: F401
+from .sources import io_ops  # noqa: F401
+from .plans import scd, mv, pipeline  # noqa: F401
+from .streaming import ingest  # noqa: F401
+from .plans import dashboard, star_schema  # noqa: F401
+from .validation import checks  # noqa: F401
+from .streaming import batch_windows  # noqa: F401
+from .ml import analytics  # noqa: F401
+from .streaming import jobs  # noqa: F401
+from .llmdata import dedup, similarity, text, multimodal, curation  # noqa: F401
 
 # Last: driver-window aliases (must see every natural registration above).
-from . import driver_window  # noqa: F401,E402
+from . import driver_window  # noqa: F401
 
 queries = registry.all_queries
 oracle_sql = registry.all_oracles

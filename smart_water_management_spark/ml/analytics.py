@@ -3467,9 +3467,9 @@ def m29_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _m30_oracle() -> str:
-    from ..registry import _REGISTRY
+    from ..registry import get
 
-    m22 = _REGISTRY["m22_forecast_backtest"].oracle
+    m22 = get("m22_forecast_backtest").oracle
     return f"""
     WITH m22 AS ({m22}),
     ranked AS (
@@ -3698,29 +3698,6 @@ def page_hinkley_from_hourly(hourly_grid: DataFrame) -> DataFrame:
         st[2].alias("u_final"),
         (st[4] > lam).alias("alarmed"),
         st[5].cast("bigint").alias("alarm_step"),
-    )
-
-
-# Wire t29's oracle (streaming.jobs registers t29 BEFORE this module
-# imports; the streaming twin must carry m31's oracle verbatim so the
-# driver certifies state-merge + fold == batch under any slicing).
-import dataclasses as _dc  # noqa: E402
-
-from ..registry import _REGISTRY as _REG_FOR_T29  # noqa: E402
-
-if "t29_streaming_page_hinkley" in _REG_FOR_T29:
-    _REG_FOR_T29["t29_streaming_page_hinkley"] = _dc.replace(
-        _REG_FOR_T29["t29_streaming_page_hinkley"],
-        oracle=_REG_FOR_T29["m31_page_hinkley"].oracle,
-    )
-
-# Same late-binding for t30: w32's oracle certifies the streaming Hampel
-# monitor (operators.windows and streaming.jobs both import before this
-# module, so both names exist here).
-if "t30_streaming_hampel" in _REG_FOR_T29:
-    _REG_FOR_T29["t30_streaming_hampel"] = _dc.replace(
-        _REG_FOR_T29["t30_streaming_hampel"],
-        oracle=_REG_FOR_T29["w32_hampel_filter"].oracle,
     )
 
 
@@ -4179,16 +4156,6 @@ def bootstrap_ci_from_hourly(hourly_grid: DataFrame) -> DataFrame:
     )
 
 
-# t31's late-bound oracle (must sit BELOW m34's registration — this
-# module tail runs after every registration above and after
-# streaming.jobs imported).
-if "t31_streaming_bootstrap_ci" in _REG_FOR_T29:
-    _REG_FOR_T29["t31_streaming_bootstrap_ci"] = _dc.replace(
-        _REG_FOR_T29["t31_streaming_bootstrap_ci"],
-        oracle=_REG_FOR_T29["m34_bootstrap_ci"].oracle,
-    )
-
-
 # --- m35 (ext.): Grubbs max-studentized-deviation outlier statistic -------------------
 
 
@@ -4390,18 +4357,6 @@ def multiple_regression_from_hourly(hourly: DataFrame) -> DataFrame:
             F.expr(f"ROUND({_M36_B2}, 6)").alias("beta_weekend"),
             F.expr(f"ROUND(1 - {_M36_SSE} / {_M36_SST}, 6)").alias("r2"),
         )
-    )
-
-
-# Late-bind t33's oracle: m36 registers at the END of this module, so the
-# wiring lives below it (the t29/t30 block above runs before m36 exists).
-if (
-    "t33_streaming_regression" in _REG_FOR_T29
-    and "m36_multiple_regression" in _REG_FOR_T29
-):
-    _REG_FOR_T29["t33_streaming_regression"] = _dc.replace(
-        _REG_FOR_T29["t33_streaming_regression"],
-        oracle=_REG_FOR_T29["m36_multiple_regression"].oracle,
     )
 
 
@@ -5719,17 +5674,6 @@ def pettitt_from_daily(daily: DataFrame) -> DataFrame:
     return k.filter(F.col("n_days") > 1).select(
         "event_type", "n_days", "k_stat", "change_day",
         F.expr(_M44_P).alias("p_approx"),
-    )
-
-
-# Same late-binding for t41: m44's oracle certifies the streaming
-# Pettitt monitor (streaming.jobs imports before this module; the
-# hourly state rolls up to m44's exact daily grid, so state-merge +
-# pettitt_from_daily == batch m44 under any slicing).
-if "t41_streaming_pettitt" in _REG_FOR_T29:
-    _REG_FOR_T29["t41_streaming_pettitt"] = _dc.replace(
-        _REG_FOR_T29["t41_streaming_pettitt"],
-        oracle=_REG_FOR_T29["m44_pettitt_test"].oracle,
     )
 
 

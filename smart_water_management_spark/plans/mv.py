@@ -12,6 +12,7 @@ incremental MV refresh.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,7 +91,8 @@ def refresh_mv(
 )
 def c07_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    # the tag becomes part of an unquoted table name: identifier chars only
+    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
     mv = f"mv_daily_rollup_{tag}"
     refresh_mv(spark, ev, mv, changed_days=None)  # initial full build
     # incremental refresh of two partitions; source unchanged, so the MV

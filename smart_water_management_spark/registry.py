@@ -182,9 +182,7 @@ def register_alias(alias: str, target: str) -> None:
     """
     if alias in _REGISTRY:
         raise ValueError(f"duplicate query name: {alias}")
-    # KeyError on a typo'd target is the right failure (driver_window
-    # catches it ONLY when an optional module failed to import)
-    spec = _REGISTRY[target]
+    spec = _REGISTRY[target]  # KeyError on a typo'd target
     _REGISTRY[alias] = QuerySpec(
         name=alias,
         fn=spec.fn,

@@ -3,11 +3,27 @@
 The reference fakes streams with per-source polling (src/enhanced_ingestion.py:
 432-545) and a PostgreSQL trigger for running aggregates
 (sql/enhanced_data_schema.sql:566-591). Here they are real streaming
-queries: file-source replay of the events table → watermarked windowed
-aggregation → sink. Each job runs with ``availableNow`` so a bounded
-replay drains the whole source deterministically — which also makes the
-streaming path oracle-checkable against the batch twins in
-``batch_windows``.
+queries over a file-source replay of a table (``_file_stream``: one
+parquet file per micro-batch). Every registered job drains its source
+through the one replay driver, ``_drain`` (throwaway checkpoint, small state-partition
+scope, ``availableNow`` trigger), so a bounded replay consumes the whole
+source deterministically — which makes each streaming path
+oracle-checkable against its batch twin.
+
+Two job shapes:
+
+- operator streams (t05, t06, t08-t10, t12, t13, t18): a windowed, session, dedup, join or
+  arbitrary-state query drained into a memory sink by
+  ``run_to_completion``;
+- ``foreachBatch`` monitors (t07, t14-t43): a state-table DDL
+  (``_state_table``) plus a merge function that folds each micro-batch
+  into the state. A merge that reads its own table writes through
+  ``_write_state``, the one lineage-truncation site; an append-only merge
+  inserts directly. The state is mergeable — sums, min/max, bottom-k,
+  bit-or, append — so after the replay it equals the batch twin's
+  intermediate under ANY micro-batch slicing, and each twin is certified
+  by its batch query's oracle, bound at registration
+  (``oracle=get("<batch>").oracle``).
 
 Scale posture: in production the file source becomes Kafka/queue with the
 same query body; watermark state is bounded per (window × key); the
@@ -17,16 +33,20 @@ sensor-status table (T10).
 
 from __future__ import annotations
 
+import hashlib
+import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from ..registry import register
+from ..registry import get, register, session_is_stopped
 
 _DEC = "decimal(27,6)"
+_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 # (applicationId, sf_dir) -> (session, ts dtype) probed from the events
 # parquet footer; the session is stored to make liveness checkable for
@@ -51,87 +71,114 @@ def _raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1: file-source stream over the events table (replay semantics).
+def _file_stream(
+    spark: SparkSession, sf_dir: str, table: str, schema: str | T.StructType
+) -> DataFrame:
+    """File-source stream over ``table``'s parquet, one file per micro-batch.
 
-    ``maxFilesPerTrigger`` is the micro-batch pacing knob (the analog of the
-    reference's refresh_minutes polling cadence).
+    ``maxFilesPerTrigger`` is the micro-batch pacing knob (the analog of
+    the reference's refresh_minutes polling cadence). File stream sources
+    need a *directory*, so the table's single parquet file — or each part
+    file of a multi-file landing directory, the production shape, since
+    the file source does not recurse into subdirs — is symlinked into a
+    stage dir (in production this is the landing directory / Kafka topic,
+    so no staging exists).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # File stream sources need a *directory*; stage the single parquet file
-    # behind a symlink dir (in production this is the landing directory /
-    # Kafka topic, so no staging exists).
-    import hashlib
-    import os
-
     stage = os.path.join(
         tempfile.gettempdir(),
-        f"swm_events_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
+        f"swm_{table}_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
     )
     os.makedirs(stage, exist_ok=True)
-    target = f"{sf_dir}/events.parquet"
-    # unconditional relink: lexists (not exists) also catches a dangling
-    # link whose target vanished, which exists() would miss and symlink()
-    # would then trip over with FileExistsError
+    target = f"{sf_dir}/{table}.parquet"
+    # unconditional relink: also clears a dangling link whose target
+    # vanished, which symlink() would otherwise trip over
     for old in os.listdir(stage):
         os.unlink(os.path.join(stage, old))
     if os.path.isdir(target):
-        # multi-file landing directory (the production shape): fan each
-        # part file into the stage so maxFilesPerTrigger paces REAL
-        # micro-batches — the file source does not recurse into subdirs
         for i, part in enumerate(
             sorted(f for f in os.listdir(target) if f.endswith(".parquet"))
         ):
             os.symlink(
                 os.path.join(target, part),
-                os.path.join(stage, f"events_{i:05d}.parquet"),
+                os.path.join(stage, f"{table}_{i:05d}.parquet"),
             )
     else:
-        os.symlink(target, os.path.join(stage, "events.parquet"))
+        os.symlink(target, os.path.join(stage, f"{table}.parquet"))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+
+
+def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T1: file-source stream over the events table (replay semantics)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from ..sources.catalog import normalize_event_ts
 
     # Footer-only batch read to learn the physical ts type (bigint = NANOS
     # via the legacy flag, timestamp_ntz = MICROS) — no data scan, but
     # still a parquet metadata round-trip per call, so cache the dtype per
     # (session, sf_dir): t12 alone builds two streams over the same table.
-    from ..registry import session_is_stopped
-
     for key in [k for k, (sess, _) in _TS_DTYPE_CACHE.items() if session_is_stopped(sess)]:
         _TS_DTYPE_CACHE.pop(key)
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     if cache_key not in _TS_DTYPE_CACHE:
-        probe = spark.read.parquet(target)
+        probe = spark.read.parquet(f"{sf_dir}/events.parquet")
         _TS_DTYPE_CACHE[cache_key] = (spark, probe.schema["ts"].dataType)
     ts_dtype = _TS_DTYPE_CACHE[cache_key][1]
-    raw = (
-        spark.readStream.schema(_raw_schema(ts_dtype))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    raw = _file_stream(spark, sf_dir, "events", _raw_schema(ts_dtype))
     return raw.withColumn("ts", normalize_event_ts(raw))
 
 
-import contextlib
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """The replay driver: run ``writer`` to completion over everything its
+    source holds (availableNow + awaitTermination = deterministic full
+    replay) with a throwaway checkpoint.
 
-
-@contextlib.contextmanager
-def _replay_state_partitions(spark: SparkSession, n: int = 4):
-    """Scope a small state-partition count around a bounded replay.
-
-    Every stateful streaming operator instantiates one state store PER
-    shuffle partition, and the count is baked into the checkpoint at
-    first batch — so a bounded local replay over MB-scale input should
-    start with a handful of stores, not a cluster-sized number (measured:
-    the stream-stream join replay is ~3x faster at 4 than at 32).
-    Production jobs with durable checkpoints size this to the cluster
-    before first start; the conf is restored on exit.
+    The replay runs under a small state-partition count: every stateful
+    streaming operator instantiates one state store PER shuffle
+    partition, and the count is baked into the checkpoint at first batch
+    — so a bounded local replay over MB-scale input should start with a
+    handful of stores, not a cluster-sized number (measured: the
+    stream-stream join replay is ~3x faster at 4 than at 32). Production
+    jobs with durable checkpoints size this to the cluster before first
+    start; the conf is restored on exit.
     """
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        yield
+        with tempfile.TemporaryDirectory() as ckpt:
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _state_table(spark: SparkSession, table: str, ddl: str) -> None:
+    """(Re)create the empty parquet state table ``table`` (columns ``ddl``)
+    a foreachBatch monitor folds its micro-batches into."""
+    from ..sources.catalog import reset_managed_table
+
+    reset_managed_table(spark, table)
+    spark.sql(f"CREATE TABLE {table} ({ddl}) USING parquet")
+
+
+def _write_state(merged: DataFrame, table: str) -> None:
+    """Overwrite a monitor's state table with its merged successor — the
+    one lineage-truncation site of the streaming jobs.
+
+    ``merged`` reads ``table`` itself, and Spark refuses to overwrite a
+    target that feeds the plan, so lineage is broken first. State tables
+    are bounded (per key, per calendar cell or per sketch), so the
+    materialization is cheap; with a Delta/Iceberg catalog this becomes a
+    real MERGE INTO.
+    """
+    merged.localCheckpoint(eager=True).write.mode("overwrite").insertInto(table)
 
 
 def run_to_completion(
@@ -139,23 +186,17 @@ def run_to_completion(
 ) -> DataFrame:
     """Drain a bounded stream into an in-memory table, return the result.
 
-    availableNow + awaitTermination = deterministic full replay. Mode note:
-    with ``append``, windows still open at end-of-stream (not yet passed by
-    the watermark) are withheld — correct streaming semantics, but a
-    bounded replay that must equal the batch result uses ``complete``.
+    Mode note: with ``append``, windows still open at end-of-stream (not
+    yet passed by the watermark) are withheld — correct streaming
+    semantics, but a bounded replay that must equal the batch result uses
+    ``complete``.
     """
     spark = stream_df.sparkSession
     name = f"{query_name}_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+    )
     return spark.table(name)
 
 
@@ -266,13 +307,10 @@ def sensor_status_upsert_stream(
     status table: counts summed, last_seen max'd — an idempotent upsert
     keyed on user_id (exactly-once via checkpoint + deterministic batch).
     """
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, target_table)
-    spark.sql(
-        f"""CREATE TABLE {target_table}
-            (user_id LONG, n_events LONG, n_errors LONG, last_seen TIMESTAMP)
-            USING parquet"""
+    _state_table(
+        spark,
+        target_table,
+        "user_id LONG, n_events LONG, n_errors LONG, last_seen TIMESTAMP",
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -292,22 +330,10 @@ def sensor_status_upsert_stream(
                 F.max("last_seen").alias("last_seen"),
             )
         )
-        # Break lineage before overwriting the table we just read (Spark
-        # refuses to overwrite a target that feeds the plan). The status
-        # table is per-key-small, so the materialization is cheap; with a
-        # Delta/Iceberg catalog this becomes a real MERGE INTO.
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto(target_table)
+        _write_state(merged, target_table)
 
     ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev.writeStream.foreachBatch(merge_batch))
     return spark.table(target_table)
 
 
@@ -358,9 +384,6 @@ def late_event_split(
     the driver. Returns (on_time_df, late_df) reading the two sinks after
     the bounded availableNow replay drains.
     """
-    import os
-    import tempfile
-
     sink_dir = sink_dir or tempfile.mkdtemp(prefix="late_split_")
     on_time_path = os.path.join(sink_dir, "on_time")
     late_path = os.path.join(sink_dir, "late")
@@ -754,15 +777,9 @@ def kmv_sketch_upsert_stream(
     right distinct-count state for streams: bounded rows per key, no
     raw-data reprocessing, mergeable across restarts.
     """
-    from ..sources.catalog import reset_managed_table
     from pyspark.sql import Window as W
 
-    reset_managed_table(spark, target_table)
-    spark.sql(
-        f"""CREATE TABLE {target_table}
-            (event_type STRING, hx STRING)
-            USING parquet"""
-    )
+    _state_table(spark, target_table, "event_type STRING, hx STRING")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         hx = F.substring(F.md5(F.col("user_id").cast("string")), 1, _KMV_HEX)
@@ -777,18 +794,10 @@ def kmv_sketch_upsert_stream(
             .filter(F.col("rn") <= KMV_K)
             .select("event_type", "hx")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto(target_table)
+        _write_state(merged, target_table)
 
     ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev.writeStream.foreachBatch(merge_batch))
     return spark.table(target_table)
 
 
@@ -847,34 +856,6 @@ def t14_streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- t15: streaming MinHash+LSH dedup-on-arrival -----------------------------
 
 
-def _stage_table_dir(sf_dir: str, table: str) -> str:
-    """Symlink-stage any table's parquet (file or multi-file directory)
-    for a file-source stream — the generalization of read_event_stream's
-    staging used by the documents stream."""
-    import hashlib
-    import os
-
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"swm_{table}_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    os.makedirs(stage, exist_ok=True)
-    target = f"{sf_dir}/{table}.parquet"
-    for old in os.listdir(stage):
-        os.unlink(os.path.join(stage, old))
-    if os.path.isdir(target):
-        for i, part in enumerate(
-            sorted(f for f in os.listdir(target) if f.endswith(".parquet"))
-        ):
-            os.symlink(
-                os.path.join(target, part),
-                os.path.join(stage, f"{table}_{i:05d}.parquet"),
-            )
-    else:
-        os.symlink(target, os.path.join(stage, f"{table}.parquet"))
-    return stage
-
-
 def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T15: near-dup detection ON ARRIVAL — the streaming twin of x08.
 
@@ -891,16 +872,10 @@ def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
         verify_jaccard,
     )
-    from ..sources.catalog import reset_managed_table
 
-    for t in ("lsh_docs_state", "lsh_pairs_state"):
-        reset_managed_table(spark, t)
-    spark.sql(
-        "CREATE TABLE lsh_docs_state (doc_id LONG, text STRING) USING parquet"
-    )
-    spark.sql(
-        "CREATE TABLE lsh_pairs_state "
-        "(doc_a LONG, doc_b LONG, jaccard DOUBLE) USING parquet"
+    _state_table(spark, "lsh_docs_state", "doc_id LONG, text STRING")
+    _state_table(
+        spark, "lsh_pairs_state", "doc_a LONG, doc_b LONG, jaccard DOUBLE"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -929,28 +904,13 @@ def lsh_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SECOND member arrives (the first member's signature is not in
         # state before its own arrival), regardless of id order
         verified = verify_jaccard(all_docs, cands)
-        staged_pairs = verified.localCheckpoint(eager=True)
-        staged_pairs.write.mode("append").insertInto("lsh_pairs_state")
-        staged_docs = new_docs.localCheckpoint(eager=True)
-        staged_docs.write.mode("append").insertInto("lsh_docs_state")
+        # append-only: neither write reads the table it appends to
+        verified.write.mode("append").insertInto("lsh_pairs_state")
+        new_docs.write.mode("append").insertInto("lsh_docs_state")
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = _file_stream(spark, sf_dir, "documents", _DOCS_SCHEMA)
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("lsh_pairs_state")
 
 
@@ -993,20 +953,14 @@ def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
     a29 sample for ANY micro-batch slicing, and the quantiles computed
     from it are bit-identical.
     """
-    from ..sources.catalog import reset_managed_table
     from pyspark.sql import Window as W
 
-    reset_managed_table(spark, "sq_sample_state")
-    reset_managed_table(spark, "sq_count_state")
-    spark.sql(
-        """CREATE TABLE sq_sample_state
-           (event_type STRING, value DOUBLE, hx STRING, event_id BIGINT)
-           USING parquet"""
+    _state_table(
+        spark,
+        "sq_sample_state",
+        "event_type STRING, value DOUBLE, hx STRING, event_id BIGINT",
     )
-    spark.sql(
-        """CREATE TABLE sq_count_state
-           (event_type STRING, n_total BIGINT) USING parquet"""
-    )
+    _state_table(spark, "sq_count_state", "event_type STRING, n_total BIGINT")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -1024,8 +978,7 @@ def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
             .filter(F.col("rn") <= SQ_K)
             .select("event_type", "value", "hx", "event_id")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("sq_sample_state")
+        _write_state(merged, "sq_sample_state")
 
         counts = (
             sp.table("sq_count_state")
@@ -1037,21 +990,10 @@ def sample_quantile_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
             .groupBy("event_type")
             .agg(F.sum("n_total").alias("n_total"))
         )
-        staged_c = counts.localCheckpoint(eager=True)
-        staged_c.write.mode("overwrite").insertInto("sq_count_state")
+        _write_state(counts, "sq_count_state")
 
     ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
-from ..registry import get as _get_spec  # noqa: E402
+    _drain(spark, ev.writeStream.foreachBatch(merge_batch))
 
 
 @register(
@@ -1059,7 +1001,7 @@ from ..registry import get as _get_spec  # noqa: E402
     # EXACTLY a29's oracle: the incremental bottom-k sample + running
     # count must land on the identical sketch (and therefore identical
     # nearest-rank quantiles) bit-for-bit.
-    oracle=_get_spec("a29_sample_quantile_sketch").oracle,
+    oracle=get("a29_sample_quantile_sketch").oracle,
     doc="T17: a29's sample-quantile sketch maintained incrementally via "
     "streaming foreachBatch — bounded state (k sample rows + 1 count row "
     "per key), merge-invariant bottom-k-by-hash, so the final "
@@ -1105,14 +1047,11 @@ def t17_streaming_sample_quantile(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- t18: stream-static point-in-time dimension join -------------------------
 
-from ..registry import get as _get_spec2  # noqa: E402
-
-
 @register(
     "t18_stream_static_pit_join",
     # EXACTLY j13's oracle: the stream-static join + complete-mode rollup
     # must land on the identical as-was report.
-    oracle=_get_spec2("j13_pit_scd2_lookup").oracle,
+    oracle=get("j13_pit_scd2_lookup").oracle,
     doc="T18: stream-STATIC join — the events stream joins the versioned "
     "SCD2 dimension (j13's fixture) with the point-in-time validity "
     "predicate per micro-batch (the dimension is a static broadcast; no "
@@ -1180,13 +1119,10 @@ def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
     """
     from pyspark.sql import Window as W
 
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "wres_state")
-    spark.sql(
-        """CREATE TABLE wres_state
-           (event_id BIGINT, event_type STRING, value DOUBLE,
-            sel_key DOUBLE) USING parquet"""
+    _state_table(
+        spark,
+        "wres_state",
+        "event_id BIGINT, event_type STRING, value DOUBLE, sel_key DOUBLE",
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1211,18 +1147,10 @@ def weighted_reservoir_upsert_stream(spark: SparkSession, sf_dir: str) -> None:
             .filter(F.col("rn") <= WRES_K)
             .select("event_id", "event_type", "value", "sel_key")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("wres_state")
+        _write_state(merged, "wres_state")
 
     ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev.writeStream.foreachBatch(merge_batch))
 
 
 @register(
@@ -1276,7 +1204,6 @@ from ..llmdata.text import (  # noqa: E402
     CMS_DEPTH,
     CMS_TOPK,
     _cms_seeded_bucket,
-    _x46_oracle,
     doc_token_table,
     tokens as _doc_tokens,
 )
@@ -1293,13 +1220,7 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     union + SUM per (seed, bucket). Counter addition is associative and
     commutative over integers, so the final grid equals the batch x46
     grid bit-for-bit for ANY micro-batch slicing."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "cms_grid_state")
-    spark.sql(
-        "CREATE TABLE cms_grid_state "
-        "(seed INT, bucket BIGINT, counter BIGINT) USING parquet"
-    )
+    _state_table(spark, "cms_grid_state", "seed INT, bucket BIGINT, counter BIGINT")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -1324,27 +1245,11 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("counter").alias("counter"))
             .select("seed", "bucket", "counter")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("cms_grid_state")
+        _write_state(merged, "cms_grid_state")
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = _file_stream(spark, sf_dir, "documents", _DOCS_SCHEMA)
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("cms_grid_state")
 
 
@@ -1352,7 +1257,7 @@ def countmin_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t20_streaming_countmin",
     # Exactly x46's oracle: the incrementally-merged grid must answer the
     # top-k probe identically to the batch-built grid.
-    oracle=_x46_oracle(),
+    oracle=get("x46_countmin_heavy_hitters").oracle,
     doc="T20: count-min heavy-hitter sketch maintained incrementally via "
     "streaming foreachBatch — each micro-batch folds its word counts "
     "into the constant-size d x w counter grid (integer SUM merge: "
@@ -1401,13 +1306,12 @@ def ri_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state equals the batch v08 lineitem block for ANY slicing — the
     shape every streaming data-quality counter takes."""
     from ..sources.catalog import load_table as _lt
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "ri_monitor_state")
-    spark.sql(
-        "CREATE TABLE ri_monitor_state "
-        "(n_rows BIGINT, n_orphans BIGINT, "
-        "min_orphan_key BIGINT, max_orphan_key BIGINT) USING parquet"
+    _state_table(
+        spark,
+        "ri_monitor_state",
+        "n_rows BIGINT, n_orphans BIGINT, "
+        "min_orphan_key BIGINT, max_orphan_key BIGINT",
     )
     parent_keys = (
         _lt(spark, sf_dir, "orders")
@@ -1439,24 +1343,12 @@ def ri_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("max_orphan_key").cast("bigint").alias("max_orphan_key"),
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("ri_monitor_state")
+        _write_state(merged, "ri_monitor_state")
 
-    stage = _stage_table_dir(sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema("l_orderkey long")  # schema projection:
-        # the monitor needs only the FK column, parquet prunes the rest
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # schema projection: the monitor needs only the FK column, parquet
+    # prunes the rest
+    stream = _file_stream(spark, sf_dir, "lineitem", "l_orderkey long")
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("ri_monitor_state")
 
 
@@ -1512,13 +1404,11 @@ def stats_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing — and a planner consulting it mid-stream only ever
     over-includes (a day's min can only tighten downward), never
     wrongly skips."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "stats_manifest_state")
-    spark.sql(
-        "CREATE TABLE stats_manifest_state "
-        "(day STRING, n_rows BIGINT, min_value DOUBLE, max_value DOUBLE, "
-        "n_null_value BIGINT, min_ts STRING, max_ts STRING) USING parquet"
+    _state_table(
+        spark,
+        "stats_manifest_state",
+        "day STRING, n_rows BIGINT, min_value DOUBLE, max_value DOUBLE, "
+        "n_null_value BIGINT, min_ts STRING, max_ts STRING",
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1558,18 +1448,10 @@ def stats_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_null_value", "min_ts", "max_ts",
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("stats_manifest_state")
+        _write_state(merged, "stats_manifest_state")
 
     ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev.writeStream.foreachBatch(merge_batch))
     return spark.table("stats_manifest_state")
 
 
@@ -1629,13 +1511,7 @@ def bloom_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once replay — idempotent state, the strongest merge class
     (t14's k-min and t20's counters tolerate slicing; the bloom also
     tolerates duplicate delivery)."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "bloom_membership_state")
-    spark.sql(
-        "CREATE TABLE bloom_membership_state "
-        "(word_idx INT, word BIGINT) USING parquet"
-    )
+    _state_table(spark, "bloom_membership_state", "word_idx INT, word BIGINT")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -1662,18 +1538,10 @@ def bloom_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.bit_or("word").alias("word"))
             .select("word_idx", "word")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("bloom_membership_state")
+        _write_state(merged, "bloom_membership_state")
 
     ev = read_event_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev.writeStream.foreachBatch(merge_batch))
     return spark.table("bloom_membership_state")
 
 
@@ -1810,12 +1678,8 @@ def ab_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     after any slicing equals the batch computation — the property that
     lets an experimentation dashboard read significance mid-flight
     without rescanning history."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "ab_monitor_state")
-    spark.sql(
-        "CREATE TABLE ab_monitor_state "
-        "(event_type STRING, arm INT, n BIGINT, conv BIGINT) USING parquet"
+    _state_table(
+        spark, "ab_monitor_state", "event_type STRING, arm INT, n BIGINT, conv BIGINT"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1849,20 +1713,12 @@ def ab_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("conv").cast("bigint").alias("conv"),
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("ab_monitor_state")
+        _write_state(merged, "ab_monitor_state")
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "event_type", "value"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("ab_monitor_state")
 
 
@@ -1955,13 +1811,7 @@ def psi_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge = groupBy-SUM and state equals the batch histogram under any
     slicing. The reference distribution (corpus-wide) is derived from
     the SAME state by re-aggregation — no second pass over history."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "psi_monitor_state")
-    spark.sql(
-        "CREATE TABLE psi_monitor_state "
-        "(source STRING, bin BIGINT, n BIGINT) USING parquet"
-    )
+    _state_table(spark, "psi_monitor_state", "source STRING, bin BIGINT, n BIGINT")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..llmdata.curation import _X104_BIN_W, _X104_NBINS
@@ -1987,23 +1837,10 @@ def psi_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("source", "bin")
             .agg(F.sum("n").cast("bigint").alias("n"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("psi_monitor_state")
+        _write_state(merged, "psi_monitor_state")
 
-    stage = _stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema("source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = _file_stream(spark, sf_dir, "documents", "source string, text string")
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("psi_monitor_state")
 
 
@@ -2111,13 +1948,7 @@ def hourly_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and order-free, so state equals the batch hourly pre-agg
     under any slicing). The grid is calendar-bounded: types x hours,
     independent of traffic volume."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "hourly_state")
-    spark.sql(
-        "CREATE TABLE hourly_state "
-        "(event_type STRING, h BIGINT, hv DECIMAL(27,6)) USING parquet"
-    )
+    _state_table(spark, "hourly_state", "event_type STRING, h BIGINT, hv DECIMAL(27,6)")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -2135,20 +1966,12 @@ def hourly_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "h")
             .agg(F.sum("hv").cast("decimal(27,6)").alias("hv"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("hourly_state")
+        _write_state(merged, "hourly_state")
 
     stream = read_event_stream(spark, sf_dir).select(
         "event_type", "ts", "value"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("hourly_state")
 
 
@@ -2225,12 +2048,8 @@ def first_touch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative, associative), so the state equals the batch first-touch
     table under any slicing and any replay. State is keyed by entity
     (one row per user x type) — the standard funnel-state shape."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "first_touch_state")
-    spark.sql(
-        "CREATE TABLE first_touch_state "
-        "(user_id BIGINT, event_type STRING, first_s BIGINT) USING parquet"
+    _state_table(
+        spark, "first_touch_state", "user_id BIGINT, event_type STRING, first_s BIGINT"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2244,20 +2063,12 @@ def first_touch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("user_id", "event_type")
             .agg(F.min("first_s").cast("bigint").alias("first_s"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("first_touch_state")
+        _write_state(merged, "first_touch_state")
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("first_touch_state")
 
 
@@ -2346,7 +2157,6 @@ def t27_streaming_conversion_latency(
 # --- t28: streaming embedding-drift (linear-MMD) moment state ----------------------
 
 from ..llmdata.similarity import (  # noqa: E402
-    _x127_oracle,
     mmd_matrix_from_sums,
     mmd_moment_sums,
 )
@@ -2363,13 +2173,7 @@ def mmd_moment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative and commutative, so the merged state equals the batch
     moment table bit-for-bit under ANY micro-batch slicing — and the
     finalized MMD matrix is certified by x127's own oracle."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "mmd_moment_state")
-    spark.sql(
-        "CREATE TABLE mmd_moment_state "
-        "(label INT, d INT, s BIGINT, c BIGINT) USING parquet"
-    )
+    _state_table(spark, "mmd_moment_state", "label INT, d INT, s BIGINT, c BIGINT")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -2384,25 +2188,12 @@ def mmd_moment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("label", "d", "s", "c")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("mmd_moment_state")
+        _write_state(merged, "mmd_moment_state")
 
-    stage = _stage_table_dir(sf_dir, "embeddings")
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = _file_stream(
+        spark, sf_dir, "embeddings", "vec_id long, embedding array<float>, label int"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("mmd_moment_state")
 
 
@@ -2410,7 +2201,7 @@ def mmd_moment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t28_streaming_mmd_monitor",
     # Exactly x127's oracle: the incrementally-merged moment state must
     # finalize to the identical label-pair MMD matrix.
-    oracle=_x127_oracle(),
+    oracle=get("x127_embedding_mmd_matrix").oracle,
     doc="T28: embedding-drift monitor maintained incrementally — each "
     "micro-batch of new vectors folds into the constant-size "
     "(label, dim) integer micro-sum grid (associative + commutative "
@@ -2437,7 +2228,7 @@ def t28_streaming_mmd_monitor(
     # exactly under any micro-batch slicing (t26's state maintainer),
     # and the PH fold is the SAME helper m31 uses — so m31's oracle is
     # this monitor's oracle verbatim.
-    oracle=None,  # set below: _REGISTRY["m31_page_hinkley"].oracle
+    oracle=get("m31_page_hinkley").oracle,
     doc="T29: streaming Page-Hinkley drift monitor — m31's sequential "
     "running-mean drift test reading the incrementally-maintained "
     "exact-decimal hourly state (t26's maintainer: per-batch partial "
@@ -2454,12 +2245,6 @@ def t29_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     return page_hinkley_from_hourly(hourly_state_stream(spark, sf_dir))
 
 
-# t29's oracle is m31's verbatim; ml.analytics imports AFTER this module
-# and wires it in (right below m31's registration) so the optional-module
-# tolerance of the package __init__ is preserved (this module must import
-# even when ml.analytics is blocked — the partial-registry contract).
-
-
 # --- t30: streaming robust-outlier (Hampel) monitor ----------------------------------
 
 
@@ -2468,9 +2253,8 @@ def t29_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Equals batch w32 bit-for-bit: the hourly decimal grid merges
     # exactly (t26's maintainer) and the rolling median/MAD pass is the
     # SAME selection helper w32 uses — w32's oracle certifies the
-    # monitor (wired below the w32 module import, same late-binding as
-    # t29/m31).
-    oracle=None,  # set in operators/windows.py: w32's oracle verbatim
+    # monitor.
+    oracle=get("w32_hampel_filter").oracle,
     doc="T30: streaming Hampel outlier monitor — w32's rolling "
     "median/MAD robust filter reading the incrementally-maintained "
     "exact-decimal hourly state. The robust companion to t04's "
@@ -2492,9 +2276,8 @@ def t30_streaming_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t31_streaming_bootstrap_ci",
     # Equals batch m34 bit-for-bit: the hourly decimal grid merges
     # exactly under any slicing and the md5-drawn Poisson resampling is
-    # a pure function of the grid — m34's oracle certifies the monitor
-    # (late-bound in ml/analytics, the t29/t30 wiring).
-    oracle=None,  # set in ml/analytics.py: m34's oracle verbatim
+    # a pure function of the grid — m34's oracle certifies the monitor.
+    oracle=get("m34_bootstrap_ci").oracle,
     doc="T31: streaming bootstrap-CI monitor — m34's deterministic "
     "Poisson-bootstrap confidence band for each type's mean hourly "
     "demand, recomputed from the incrementally-maintained exact-"
@@ -2521,12 +2304,9 @@ def daily_flow_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free, so the state equals w34's batch grid under any slicing).
     The grid is calendar-bounded: cohorts x days, independent of volume."""
     from ..operators.windows import daily_flow_grid
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "daily_flow_state")
-    spark.sql(
-        "CREATE TABLE daily_flow_state "
-        "(cohort BIGINT, day BIGINT, flow DECIMAL(27,6)) USING parquet"
+    _state_table(
+        spark, "daily_flow_state", "cohort BIGINT, day BIGINT, flow DECIMAL(27,6)"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2539,20 +2319,12 @@ def daily_flow_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("flow").cast(_DEC).alias("flow"))
             .select("cohort", "day", "flow")
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("daily_flow_state")
+        _write_state(merged, "daily_flow_state")
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "event_type", "ts", "value"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("daily_flow_state")
 
 
@@ -2560,9 +2332,8 @@ def daily_flow_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t32_streaming_drawdown",
     # Equals batch w34 bit-for-bit: the daily decimal flow grid merges
     # exactly under any micro-batch slicing and the drawdown pass is
-    # the SAME helper w34 uses — w34's oracle certifies the monitor
-    # (late-bound below; operators.windows imports before this module).
-    oracle=None,  # set below: w34's oracle verbatim
+    # the SAME helper w34 uses — w34's oracle certifies the monitor.
+    oracle=get("w34_max_drawdown").oracle,
     doc="T32: streaming max-drawdown monitor — w34's per-cohort "
     "signed-flow equity-curve drawdown recomputed from the "
     "incrementally-maintained exact-decimal daily grid, so the "
@@ -2577,21 +2348,6 @@ def t32_streaming_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drawdown_from_daily(daily_flow_state_stream(spark, sf_dir))
 
 
-# Wire t32's oracle: operators.windows imports BEFORE streaming.jobs in
-# the package __init__, so w34's registration is visible here; the guard
-# keeps the partial-registry tolerance (windows module absent => t32
-# stays rows-only rather than crashing the import).
-import dataclasses as _dc  # noqa: E402
-
-from ..registry import _REGISTRY as _REG_FOR_T32  # noqa: E402
-
-if "w34_max_drawdown" in _REG_FOR_T32 and "t32_streaming_drawdown" in _REG_FOR_T32:
-    _REG_FOR_T32["t32_streaming_drawdown"] = _dc.replace(
-        _REG_FOR_T32["t32_streaming_drawdown"],
-        oracle=_REG_FOR_T32["w34_max_drawdown"].oracle,
-    )
-
-
 # --- t33: streaming multiple-regression monitor -----------------------------------------
 
 
@@ -2600,8 +2356,8 @@ if "w34_max_drawdown" in _REG_FOR_T32 and "t32_streaming_drawdown" in _REG_FOR_T
     # Equals batch m36 bit-for-bit: the exact-decimal hourly grid merges
     # under any slicing (t26's maintainer) and the moment fold + Cramer
     # solve is the SAME helper m36 uses — m36's oracle certifies the
-    # monitor (late-bound in ml/analytics, the t29/t30/t31 wiring).
-    oracle=None,  # set in ml/analytics.py: m36's oracle verbatim
+    # monitor.
+    oracle=get("m36_multiple_regression").oracle,
     doc="T33: streaming multiple-regression monitor — m36's closed-form "
     "(trend, weekend) OLS recomputed from the incrementally-"
     "maintained exact-decimal hourly state, so the demand model's "
@@ -2631,18 +2387,8 @@ def winnow_state_stream(
     and per-doc position counts once and APPENDS them — no re-scan, no
     overwrite; the union of appends equals the batch tables for any
     slicing (each doc lives in exactly one micro-batch)."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "winnow_fp_state")
-    reset_managed_table(spark, "winnow_doc_state")
-    spark.sql(
-        "CREATE TABLE winnow_fp_state "
-        "(doc_id BIGINT, source STRING, fp STRING) USING parquet"
-    )
-    spark.sql(
-        "CREATE TABLE winnow_doc_state "
-        "(doc_id BIGINT, source STRING, npos BIGINT) USING parquet"
-    )
+    _state_table(spark, "winnow_fp_state", "doc_id BIGINT, source STRING, fp STRING")
+    _state_table(spark, "winnow_doc_state", "doc_id BIGINT, source STRING, npos BIGINT")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..llmdata.text import (
@@ -2650,28 +2396,17 @@ def winnow_state_stream(
             winnow_doc_positions,
         )
 
-        fps = winnow_doc_fingerprints(batch_df).localCheckpoint(eager=True)
-        fps.write.mode("append").insertInto("winnow_fp_state")
-        pos = winnow_doc_positions(batch_df).localCheckpoint(eager=True)
-        pos.write.mode("append").insertInto("winnow_doc_state")
+        winnow_doc_fingerprints(batch_df).write.mode("append").insertInto(
+            "winnow_fp_state"
+        )
+        winnow_doc_positions(batch_df).write.mode("append").insertInto(
+            "winnow_doc_state"
+        )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, source string, text string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    schema = "doc_id long, source string, text string, n_chars long"
+    stream = _file_stream(spark, sf_dir, "documents", schema)
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("winnow_fp_state"), spark.table("winnow_doc_state")
 
 
@@ -2680,9 +2415,8 @@ def winnow_state_stream(
     # Equals batch x143 bit-for-bit: fingerprints are within-doc, so
     # appended partials equal the batch tables under any slicing, and
     # the finalize is the SAME helper x143 uses — x143's oracle
-    # certifies the monitor (late-bound at the tail of THIS module,
-    # ~20 lines below, because text imports before t34 registers).
-    oracle=None,  # late-bound at this module's tail: x143's oracle verbatim
+    # certifies the monitor.
+    oracle=get("x143_winnowing_fingerprints").oracle,
     doc="T34: streaming winnowing-contamination monitor — x143's "
     "MOSS-fingerprint density + cross-source overlap report "
     "recomputed from incrementally APPENDED per-doc fingerprint "
@@ -2701,25 +2435,6 @@ def t34_streaming_winnow_monitor(
     return winnow_report(fps, pos)
 
 
-# Late-bind t34's oracle: this module itself imports llmdata.text above
-# (line ~1275), so x143 is already registered by the time this tail runs
-# — the twin carries x143's oracle verbatim, certifying state-append +
-# finalize == batch under any slicing (t29-t33's pattern, hosted here
-# because text imports BEFORE t34's registration, not after).
-import dataclasses as _dc  # noqa: E402
-
-from ..registry import _REGISTRY as _REG_FOR_T34  # noqa: E402
-
-if (
-    "t34_streaming_winnow_monitor" in _REG_FOR_T34
-    and "x143_winnowing_fingerprints" in _REG_FOR_T34
-):
-    _REG_FOR_T34["t34_streaming_winnow_monitor"] = _dc.replace(
-        _REG_FOR_T34["t34_streaming_winnow_monitor"],
-        oracle=_REG_FOR_T34["x143_winnowing_fingerprints"].oracle,
-    )
-
-
 # --- t35: streaming Mann-Whitney monitor ------------------------------------------------
 
 
@@ -2729,12 +2444,8 @@ def quantity_grid_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts merge by groupBy-SUM (integer-in-decimal addition is exact
     and order-free, so state equals the batch grid under any slicing).
     The grid is value-domain-bounded (~50 rows) regardless of traffic."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "quantity_grid_state")
-    spark.sql(
-        "CREATE TABLE quantity_grid_state "
-        "(v BIGINT, c_o DECIMAL(14,0), c_f DECIMAL(14,0)) USING parquet"
+    _state_table(
+        spark, "quantity_grid_state", "v BIGINT, c_o DECIMAL(14,0), c_f DECIMAL(14,0)"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2768,33 +2479,13 @@ def quantity_grid_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("c_f").cast("decimal(14,0)").alias("c_f"),
             )
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("quantity_grid_state")
+        _write_state(merged, "quantity_grid_state")
 
-    stage = _stage_table_dir(sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema("l_quantity double, l_linestatus string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = _file_stream(
+        spark, sf_dir, "lineitem", "l_quantity double, l_linestatus string"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("quantity_grid_state")
-
-
-def _a48_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a48's oracle is present at this module's registration time — no
-    # late binding needed (unlike the t29-t33 analytics wiring).
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a48_mann_whitney"].oracle
 
 
 @register(
@@ -2802,7 +2493,7 @@ def _a48_oracle() -> str:
     # Equals batch a48 bit-for-bit: the value-domain grid merges under
     # any slicing (cell counts are sums) and the finalize is the SAME
     # helper a48 uses — a48's oracle certifies the monitor.
-    oracle=_a48_oracle(),
+    oracle=get("a48_mann_whitney").oracle,
     doc="T35: streaming Mann-Whitney monitor — a48's two-sample rank "
     "test recomputed from the incrementally-maintained quantity grid, "
     "so the 'are open and finished orders drawing from the same "
@@ -2834,12 +2525,9 @@ def interval_span_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number of DISJOINT spans per user — bounded by coverage
     geometry, not traffic volume."""
     from ..operators.joins import coalesce_spans
-    from ..sources.catalog import reset_managed_table
 
-    reset_managed_table(spark, "interval_span_state")
-    spark.sql(
-        "CREATE TABLE interval_span_state "
-        "(user_id BIGINT, s BIGINT, e BIGINT, w BIGINT) USING parquet"
+    _state_table(
+        spark, "interval_span_state", "user_id BIGINT, s BIGINT, e BIGINT, w BIGINT"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2863,29 +2551,13 @@ def interval_span_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("span_end").alias("e"),
             F.col("n_intervals").alias("w"),
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto("interval_span_state")
+        _write_state(merged, "interval_span_state")
 
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("interval_span_state")
-
-
-def _j17_oracle() -> str:
-    # joins imports before streaming.jobs (package __init__ order), so
-    # j17's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["j17_interval_coalesce"].oracle
 
 
 @register(
@@ -2894,7 +2566,7 @@ def _j17_oracle() -> str:
     # on interval sets and weight-mergeable with per-span counts, and
     # the finalize aggregates the SAME span table shape j17's helper
     # produces — j17's oracle certifies the monitor.
-    oracle=_j17_oracle(),
+    oracle=get("j17_interval_coalesce").oracle,
     doc="T36: streaming interval-coalesce monitor — j17's per-user "
     "span coverage report recomputed from incrementally re-coalesced "
     "span state, so SLA-coverage / downtime-merge dashboards refresh "
@@ -2931,20 +2603,12 @@ def t36_streaming_interval_coalesce(
 # --- t37: streaming Cliff's-delta effect-size monitor ------------------------------------
 
 
-def _a50_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a50's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a50_cliffs_delta"].oracle
-
-
 @register(
     "t37_streaming_cliffs_delta",
     # Equals batch a50 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, two monitors) and a50's
     # finalize helper — a50's oracle certifies the monitor.
-    oracle=_a50_oracle(),
+    oracle=get("a50_cliffs_delta").oracle,
     doc="T37: streaming Cliff's-delta monitor — a50's ordinal effect "
     "size recomputed from the SAME incrementally-maintained quantity "
     "grid t35 keeps for the Mann-Whitney z (one mergeable ~50-cell "
@@ -2965,20 +2629,12 @@ def t37_streaming_cliffs_delta(
 # --- t38: streaming Ansari-Bradley dispersion monitor --------------------------------------
 
 
-def _a53_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a53's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a53_ansari_bradley"].oracle
-
-
 @register(
     "t38_streaming_ansari_bradley",
     # Equals batch a53 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, three monitors) and a53's
     # finalize helper — a53's oracle certifies the monitor.
-    oracle=_a53_oracle(),
+    oracle=get("a53_ansari_bradley").oracle,
     doc="T38: streaming Ansari-Bradley monitor — a53's dispersion test "
     "recomputed from the SAME incrementally-maintained quantity grid "
     "t35/t37 keep, completing the streaming two-sample console: t35 "
@@ -3010,12 +2666,8 @@ def year_quantity_grid_stream(
     statistic argument as t35's quantity grid, with the year axis kept).
     State size is bounded by the (years x quantity-domain) product
     (~350 cells), never by traffic volume."""
-    from ..sources.catalog import reset_managed_table
-
-    reset_managed_table(spark, "year_quantity_grid_state")
-    spark.sql(
-        "CREATE TABLE year_quantity_grid_state "
-        "(yr BIGINT, v BIGINT, c DECIMAL(14,0)) USING parquet"
+    _state_table(
+        spark, "year_quantity_grid_state", "yr BIGINT, v BIGINT, c DECIMAL(14,0)"
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -3034,34 +2686,13 @@ def year_quantity_grid_stream(
             .groupBy("yr", "v")
             .agg(F.sum("c").cast("decimal(14,0)").alias("c"))
         )
-        staged = merged.localCheckpoint(eager=True)
-        staged.write.mode("overwrite").insertInto(
-            "year_quantity_grid_state"
-        )
+        _write_state(merged, "year_quantity_grid_state")
 
-    stage = _stage_table_dir(sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema("l_quantity double, l_shipdate timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = _file_stream(
+        spark, sf_dir, "lineitem", "l_quantity double, l_shipdate timestamp"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _replay_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge_batch))
     return spark.table("year_quantity_grid_state")
-
-
-def _a51_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a51's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a51_gamma_somers_tauc"].oracle
 
 
 @register(
@@ -3069,7 +2700,7 @@ def _a51_oracle() -> str:
     # Equals batch a51 bit-for-bit: the (yr, v) contingency grid merges
     # under any slicing and the finalize is the SAME helper a51 uses —
     # a51's oracle certifies the monitor.
-    oracle=_a51_oracle(),
+    oracle=get("a51_gamma_somers_tauc").oracle,
     doc="T39: streaming ordinal-association monitor — a51's gamma / "
     "Somers' D / tau-c recomputed from an incrementally-maintained "
     "(year x quantity) contingency grid as line items stream in: a "
@@ -3094,20 +2725,12 @@ def t39_streaming_gamma_monitor(
 # --- t40: streaming Cramér-von Mises distribution-distance monitor -------------------------
 
 
-def _a55_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__ order),
-    # so a55's oracle is present at this module's registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a55_cramer_von_mises"].oracle
-
-
 @register(
     "t40_streaming_cramer_von_mises",
     # Equals batch a55 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, four monitors) and a55's
     # finalize helper — a55's oracle certifies the monitor.
-    oracle=_a55_oracle(),
+    oracle=get("a55_cramer_von_mises").oracle,
     doc="T40: streaming Cramér-von Mises monitor — a55's whole-ECDF "
     "two-sample distance recomputed from the SAME incrementally-"
     "maintained quantity grid t35/t37/t38 keep, finishing the "
@@ -3135,11 +2758,9 @@ def t40_streaming_cramer_von_mises(
     # Equals batch m44 bit-for-bit: t26's exact-decimal hourly state
     # rolls up to the daily grid (decimal addition is associative, and
     # day = floor(h/24) is exact integer arithmetic), then m44's
-    # pettitt_from_daily finalize runs unchanged. ml.analytics imports
-    # AFTER this module, so m44's oracle is LATE-BOUND there (the
-    # t29/t30 pattern at analytics.py's foot) — the registered spec
-    # carries m44's oracle verbatim by the time the registry is read.
-    oracle=None,
+    # pettitt_from_daily finalize runs unchanged — m44's oracle
+    # certifies the monitor.
+    oracle=get("m44_pettitt_test").oracle,
     doc="T41: streaming Pettitt changepoint monitor — m44's "
     "distribution-free break detector recomputed from the SAME "
     "incrementally-merged hourly decimal grid t26 maintains (one "
@@ -3171,21 +2792,13 @@ def t41_streaming_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- t42: streaming Page-trend monitor (hourly grid -> daily rollup) -----------------------
 
 
-def _a56_oracle() -> str:
-    # operators.aggregations imports before streaming.jobs (package
-    # __init__ order), so a56's oracle is present at registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a56_page_trend_test"].oracle
-
-
 @register(
     "t42_streaming_page_trend",
     # Equals batch a56 bit-for-bit: t26's exact-decimal hourly state
     # rolls up to the daily micro grid (t41's rollup device), then
     # a56's page_trend_from_daily finalize runs unchanged — a56's
     # oracle certifies the monitor.
-    oracle=_a56_oracle(),
+    oracle=get("a56_page_trend_test").oracle,
     doc="T42: streaming Page-trend monitor — a56's ordered weekday "
     "trend statistic recomputed from the SAME incrementally-merged "
     "hourly decimal state t26/t41 maintain (one state, three alarms: "
@@ -3217,20 +2830,12 @@ def t42_streaming_page_trend(
 # --- t43: streaming Anderson-Darling tail-divergence monitor -------------------------------
 
 
-def _a58_oracle() -> str:
-    # aggregations imports before streaming.jobs (package __init__
-    # order), so a58's oracle is present at registration time.
-    from ..registry import _REGISTRY
-
-    return _REGISTRY["a58_anderson_darling"].oracle
-
-
 @register(
     "t43_streaming_anderson_darling",
     # Equals batch a58 bit-for-bit: REUSES t35's incrementally-merged
     # quantity grid (one state maintainer, five monitors) and a58's
     # finalize helper — a58's oracle certifies the monitor.
-    oracle=_a58_oracle(),
+    oracle=get("a58_anderson_darling").oracle,
     doc="T43: streaming Anderson-Darling monitor — a58's tail-weighted "
     "ECDF distance recomputed from the SAME incrementally-maintained "
     "quantity grid t35/t37/t38/t40 keep, completing the streaming "

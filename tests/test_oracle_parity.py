@@ -85,6 +85,14 @@ _HEADLINE = [
 def _default_subset() -> set[str]:
     from smart_water_management_spark.driver_window import DRIVER_WINDOW
 
+    # a misspelled name must fail loudly, not drop out of the intersection
+    for label, names in (
+        ("DRIVER_WINDOW", DRIVER_WINDOW),
+        ("_HEADLINE", _HEADLINE),
+        ("ROUND_TOUCHED", ROUND_TOUCHED),
+    ):
+        unknown = set(names) - set(ALL)
+        assert not unknown, f"{label} names not in the registry: {sorted(unknown)}"
     subset = set(DRIVER_WINDOW) | set(_HEADLINE) | set(ROUND_TOUCHED)
     # breadth: the alphabetically-first oracle-backed name per family prefix
     for prefix in sorted({n[0] for n in ALL}):
@@ -207,11 +215,10 @@ def test_entry_smoke(spark):
     assert set(swm.oracle_sql()).issubset(set(swm.queries()))
 
 
-def test_package_import_survives_partial_registry():
-    """If an optional module is unavailable (e.g. pyspark.ml missing for
-    ml.analytics), its registrations are absent — the driver-window aliases
-    for those targets must be SKIPPED, not crash the whole package import
-    with KeyError. Natural names then slide into the vacated window slots."""
+def test_package_import_fails_on_missing_module():
+    """The package imports its modules plainly: a module that cannot be
+    imported (here ml.analytics, blocked) fails the package import instead
+    of silently dropping its registrations from the registry."""
     import subprocess
     import sys
 
@@ -223,18 +230,23 @@ def test_package_import_survives_partial_registry():
         "            raise ModuleNotFoundError(name)\n"
         "        return None\n"
         "sys.meta_path.insert(0, Blocker())\n"
-        "import smart_water_management_spark as swm\n"
-        "qs = swm.queries()\n"
-        "assert 'm01_kmeans_clusters' not in qs, 'block failed'\n"
-        "assert not any(k.startswith('a00_') and k.endswith('m01_kmeans_clusters') for k in qs), 'alias not skipped'\n"
-        "assert 'a01_multi_agg_pricing' in qs\n"
-        "print('PARTIAL_OK', len(qs))\n"
+        "import smart_water_management_spark\n"
+        "print('IMPORTED')\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
     )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "PARTIAL_OK" in out.stdout
+    assert out.returncode != 0 and "IMPORTED" not in out.stdout
+    assert "ModuleNotFoundError: smart_water_management_spark.ml.analytics" in out.stderr
+
+
+def test_registry_size_is_pinned():
+    """Every module registers: 570 names (520 natural + 50 driver-window
+    aliases), 559 of them oracle-backed. A change to the registry's size
+    is a deliberate edit of these numbers, never a silent loss."""
+    natural = [n for n, s in _REGISTRY.items() if s.alias_of is None]
+    with_oracle = [n for n, s in _REGISTRY.items() if s.oracle is not None]
+    assert (len(_REGISTRY), len(natural), len(with_oracle)) == (570, 520, 559)
 
 
 def test_readme_family_counts_match_registry():

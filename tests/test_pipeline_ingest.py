@@ -360,6 +360,25 @@ def test_dynamic_partition_overwrite_touches_only_written_partition(spark, tmp_p
     assert f_sum == orig_f
 
 
+def test_mv_refresh_on_dashed_data_dir(spark, duck, tmp_path):
+    """c07 names its MV table after the data directory; a basename with
+    characters outside [A-Za-z0-9_] (here ``-`` and ``.``) must still give
+    a valid identifier, and the refreshed MV must equal its oracle."""
+    import os
+
+    from smart_water_management_spark.plans.mv import c07_mv_refresh
+    from smart_water_management_spark.registry import get
+
+    from .conftest import assert_oracle_match
+
+    dashed = tmp_path / "sf-0.001"
+    os.symlink(os.path.abspath(SF_DIR), dashed)
+    # the undecorated function: the registry wrapper's per-input conf
+    # tuning would leak this tmp dir's posture into later tests
+    out = c07_mv_refresh(spark, str(dashed))
+    assert_oracle_match(out, duck, get("c07_mv_refresh").oracle, "c07_mv_refresh")
+
+
 def test_jdbc_identifier_quote_styles():
     """Quote style follows the JDBC dialect; table quoting stays opt-in
     because Spark's JDBC writer leaves table names unquoted (Derby

@@ -1,11 +1,14 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for headline queries into plans/r11/.
+"""Capture .explain("formatted") for headline queries into a round's
+plans directory.
 
-Usage: python tools/r11_plans.py before|after [query ...]
+Usage: python tools/capture_plans.py <outdir> before|after [query ...]
 
-Writes plans/r11/<query>_<tag>.txt and prints a one-line plan-shape
-summary (Exchange count, join strategies, Python eval nodes) per query
-so before/after diffs are auditable (optimization guide §1 / §7.2).
+With no query names, captures bench.py's HEADLINE suite. Writes
+<outdir>/<query>_<tag>.txt (e.g. outdir plans/r13) and prints a
+one-line plan-shape summary (Exchange count, join strategies, Python
+eval nodes) per query so before/after diffs are auditable (optimization
+guide §1 / §7.2).
 """
 
 from __future__ import annotations
@@ -22,22 +25,9 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 from pyspark.sql import SparkSession
 
 import smart_water_management_spark as swm
+from bench import HEADLINE
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = [
-    "a01_multi_agg_pricing", "a14_rollup_grains", "j03_star_join",
-    "j09_asof_join", "j10_range_join", "k04_skew_join_salted",
-    "k06_bloom_prefilter", "w02_range_rolling", "w06_rolling_zscore",
-    "w13_time_weighted_avg", "q05_district_performance",
-    "v01_fused_validation", "t01_tumbling_hourly", "t03_sessionization",
-    "t05_streaming_hourly", "a24_kmv_sketch", "x05_exact_dedup",
-    "x08_minhash_lsh_dedup", "x53_pps_sample", "x36_tile_dedup",
-    "x10_bruteforce_cosine_topk", "x41_hyperplane_lsh_ann",
-    "x65_ivfpq_topk", "x01_token_stats", "x27_unigram_logppl",
-    "x90_curation_funnel", "p90_domain_pipeline",
-]
-
 
 def summarize(plan: str) -> str:
     n_ex = len(re.findall(r"\bExchange\b", plan))
@@ -56,13 +46,11 @@ def summarize(plan: str) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or HEADLINE
-    outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r11")
+    outdir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or HEADLINE
     os.makedirs(outdir, exist_ok=True)
     spark = (
-        SparkSession.builder.appName("r11-plans")
+        SparkSession.builder.appName("capture-plans")
         .master(f"local[{os.environ['SPARK_GRAFT_CPUS']}]")
         .config("spark.sql.shuffle.partitions",
                 str(max(8, int(os.environ["SPARK_GRAFT_CPUS"]))))

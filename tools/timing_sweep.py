@@ -4,13 +4,14 @@
 Times EVERY natural (non-alias) registered query at $SPARK_GRAFT_SF_DIR
 with the noop sink (guide §1.4 — computes every column, no sink cost),
 one warm-up-free pass by default (pass --passes 2 for min-of-2), and
-writes a sorted JSON report to plans/r12/sweep_<tag>.json.
+writes a sorted JSON report to <outdir>/sweep_<tag>.json (e.g. outdir
+plans/r13).
 
 This finds the slow tail the headline bench cannot see: the driver's
 verify replays all ~520 declared queries, so a handful of 2-second
 stragglers cost more wall clock than any headline query.
 
-Usage: python tools/r12_sweep.py <tag> [--passes N] [--names a,b,c]
+Usage: python tools/timing_sweep.py <outdir> <tag> [--passes N] [--names a,b,c]
 """
 
 from __future__ import annotations
@@ -32,10 +33,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "sweep"
+    outdir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "sweep"
     passes = 1
     only = None
-    args = sys.argv[2:]
+    args = sys.argv[3:]
     while args:
         a = args.pop(0)
         if a == "--passes":
@@ -45,7 +47,7 @@ def main() -> None:
     cpus = os.environ["SPARK_GRAFT_CPUS"]
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("r12_sweep")
+        .appName("timing_sweep")
         .config("spark.sql.shuffle.partitions", str(max(8, int(cpus))))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -95,10 +97,8 @@ def main() -> None:
         "slowest": dict(sorted(out.items(), key=lambda kv: -kv[1])[:40]),
         "times": out,
     }
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r12", f"sweep_{tag}.json",
-    )
+    os.makedirs(outdir, exist_ok=True)
+    path = os.path.join(outdir, f"sweep_{tag}.json")
     with open(path, "w") as f:
         json.dump(report, f, indent=1)
     print(f"wrote {path}; total {report['total_wall']}s over {len(out)} queries")
