@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, pin_derived
 from .dedup import lsh_candidate_pairs, minhash_signatures, verify_jaccard
 
 MAX_ROUNDS = 20
@@ -139,15 +139,13 @@ def dedup_corpus(
     session still computes everything from the parquet inputs.
     """
     if sigs is None:
-        sigs = minhash_signatures(docs).persist()
+        sigs = minhash_signatures(docs)
 
     def build() -> DataFrame:
         pairs = verify_jaccard(docs, lsh_candidate_pairs(sigs), threshold)
         return connected_components(pairs)
 
     if cache_key is not None:
-        from ..sources.catalog import pin_derived
-
         comps = pin_derived(
             docs.sparkSession,
             cache_key,
@@ -366,8 +364,6 @@ def x69_canonical_by_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equals close-directly — connected_components symmetrizes
     # internally), so share the session pin under the same key instead
     # of re-running the label propagation
-    from ..sources.catalog import pin_derived
-
     comp = pin_derived(
         spark,
         sf_dir,
@@ -757,20 +753,17 @@ def _x118_oracle() -> str:
     "and a scalar row",
 )
 def x118_dedup_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import pinned_corpus_signatures
+    from .dedup import pinned_verified_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = pinned_corpus_signatures(spark, sf_dir)
-    pairs = verify_jaccard(docs, lsh_candidate_pairs(sigs)).persist()
-    # r11: same pinned-signature pair graph as every dedup_corpus
-    # consumer — share the session-pinned component table
-    from ..sources.catalog import pin_derived
-
+    # x105's pinned pair graph; the same graph every dedup_corpus consumer
+    # closes, so the session-pinned component table is shared too
+    pairs = pinned_verified_pairs(spark, sf_dir)
     comps = pin_derived(
         spark,
         sf_dir,
         "dedup_components_t0.5",
-        lambda: connected_components(pairs.select("doc_a", "doc_b")),
+        lambda: connected_components(pairs),
     )
     canon = (
         docs.join(comps, "doc_id", "left")
@@ -1246,8 +1239,6 @@ def x145_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = verify_jaccard(docs, lsh_candidate_pairs(sigs))
     # r11: same pinned-signature pair graph as every dedup_corpus
     # consumer — share the session-pinned component table
-    from ..sources.catalog import pin_derived
-
     comps = pin_derived(
         spark,
         sf_dir,

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import fan_out, load_table
+from ..sources.catalog import fan_out, load_table, pin_derived
 from .text import STOPWORDS, bag_fp_expr, quality_expr, sql_quality_expr, tokens
 
 # k=16 over 8 bands (r=2 rows/band) aligns the LSH s-curve with the 0.5
@@ -324,8 +324,6 @@ def pinned_corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     release it. The signatures are k longs per doc — tiny relative to
     the corpus at any scale (at 100 TB of text this is the table you'd
     write to disk)."""
-    from ..sources.catalog import pin_derived
-
     return pin_derived(
         spark,
         sf_dir,
@@ -344,10 +342,23 @@ def pinned_simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     second and later consumers per session serve from the pin (first
     use still computes from parquet; ``pin_derived``'s byte budget
     governs it)."""
-    from ..sources.catalog import pin_derived
-
     docs = load_table(spark, sf_dir, "documents")
     return pin_derived(spark, sf_dir, "simhash_sigs", lambda: simhash64(docs))
+
+
+def pinned_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Jaccard-verified near-dup pair graph (doc_a < doc_b) over the
+    pinned corpus signatures: x105 counts its triangles and x118 re-probes
+    it against the canonical survivors, so both read one pin."""
+    docs = load_table(spark, sf_dir, "documents")
+    return pin_derived(
+        spark,
+        sf_dir,
+        "verified_pairs",
+        lambda: verify_jaccard(
+            docs, lsh_candidate_pairs(pinned_corpus_signatures(spark, sf_dir))
+        ).select("doc_a", "doc_b"),
+    )
 
 
 def _x08_oracle() -> str:
@@ -778,7 +789,10 @@ def _x39_oracle() -> str:
 def x39_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base_sigs = ensure_base_signatures(spark, sf_dir)
-    delta_sigs = minhash_signatures(docs.filter(DELTA_PRED)).persist()
+    delta_sigs = pin_derived(
+        spark, sf_dir, "x39_delta_sigs",
+        lambda: minhash_signatures(docs.filter(DELTA_PRED)),
+    )
     all_banded = _banded(base_sigs.unionByName(delta_sigs))
     delta_banded = _banded(delta_sigs)
     probe = delta_banded.select(
@@ -1161,14 +1175,7 @@ def _x105_oracle() -> str:
     "counts are one aggregate over the degree table",
 )
 def x105_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        verify_jaccard(
-            docs, lsh_candidate_pairs(pinned_corpus_signatures(spark, sf_dir))
-        )
-        .select("doc_a", "doc_b")
-        .persist()
-    )
+    edges = pinned_verified_pairs(spark, sf_dir)
     nodes = (
         edges.select(F.col("doc_a").alias("v"))
         .union(edges.select("doc_b"))

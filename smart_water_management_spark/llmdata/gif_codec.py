@@ -18,6 +18,7 @@ tests drive the real decoder bit paths.
 from __future__ import annotations
 
 import struct
+from functools import lru_cache
 
 GIF_SIGS = (b"GIF87a", b"GIF89a")
 
@@ -58,38 +59,29 @@ class _BitReader:
 
 
 # The LZW base table is identical for every CLEAR at a given code size;
-# rebuilding it per reset was 16% of decode_gif's profile. Bounded memo:
-# min_code_size <= 8, so at most 9 distinct tables ever exist.
-_BASE_TABLE_CACHE: dict[int, list] = {}
+# rebuilding it per reset was 16% of decode_gif's profile. min_code_size
+# <= 8, so at most 9 distinct tables ever exist. Callers mutate the table,
+# so each gets a copy of the memoized one.
+@lru_cache(maxsize=None)
+def _base_table_memo(clear: int) -> tuple:
+    return tuple(bytes([i]) for i in range(clear)) + (b"", b"")
 
 
 def _base_table(clear: int) -> list:
-    t = _BASE_TABLE_CACHE.get(clear)
-    if t is None:
-        t = [bytes([i]) for i in range(clear)] + [b"", b""]
-        _BASE_TABLE_CACHE[clear] = t
-    return t.copy()
+    return list(_base_table_memo(clear))
 
 
 # Palette -> 8-bit luma translation tables (256 bytes, padded), memoized
 # per color table so the per-pixel gray loop becomes one C-speed
-# bytes.translate. Bounded: cleared if ever fed >64 distinct palettes.
-_GRAY_LUT_CACHE: dict[bytes, bytes] = {}
-
-
+# bytes.translate. LRU-bounded at 64 palettes.
+@lru_cache(maxsize=64)
 def _gray_lut(lct: bytes) -> bytes:
-    t = _GRAY_LUT_CACHE.get(lct)
-    if t is None:
-        if len(_GRAY_LUT_CACHE) > 64:
-            _GRAY_LUT_CACHE.clear()
-        n = len(lct) // 3
-        t = bytes(
-            (lct[3 * i] * 299 + lct[3 * i + 1] * 587 + lct[3 * i + 2] * 114)
-            // 1000
-            for i in range(n)
-        ) + bytes(256 - n)
-        _GRAY_LUT_CACHE[lct] = t
-    return t
+    n = len(lct) // 3
+    return bytes(
+        (lct[3 * i] * 299 + lct[3 * i + 1] * 587 + lct[3 * i + 2] * 114)
+        // 1000
+        for i in range(n)
+    ) + bytes(256 - n)
 
 
 def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> bytearray:

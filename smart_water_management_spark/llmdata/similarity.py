@@ -21,7 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import fan_out, literal_df, load_table
+from ..sources.catalog import fan_out, literal_df, load_table, memo, pin_derived
 
 N_QUERIES = 10
 TOP_K = 5
@@ -166,20 +166,6 @@ def x11_cosine_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ANN index registry (the ml._KMEANS_CACHE pattern): an index is BUILT
-# once and QUERIED many times — refitting the coarse quantizer on every
-# query batch misrepresents serving cost by an order of magnitude. Keyed
-# by applicationId so models bound to stopped contexts are evicted.
-_IVF_MODEL_CACHE: dict[tuple, tuple[SparkSession, object]] = {}
-
-
-def _evict_dead_models(cache: dict) -> None:
-    from ..registry import session_is_stopped
-
-    for k in [k for k, v in cache.items() if session_is_stopped(v[0])]:
-        cache.pop(k)
-
-
 def ivf_index(
     em: DataFrame, n_cells: int = 8, seed: int = 42, cache_key: str | None = None
 ) -> tuple[DataFrame, "object"]:
@@ -190,27 +176,25 @@ def ivf_index(
     With ``cache_key`` (the dataset identity, e.g. sf_dir) the fitted
     model is reused per session — index-build once, serve many.
     """
-    from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-
-    spark = em.sparkSession
-    key = None
-    if cache_key is not None:
-        _evict_dead_models(_IVF_MODEL_CACHE)
-        from ..sources.catalog import session_key
-
-        key = (session_key(spark), cache_key, n_cells, seed)
-        if key in _IVF_MODEL_CACHE:
-            model = _IVF_MODEL_CACHE[key][1]
-            vecs = em.select(
-                "vec_id", "label", F.col("e"), array_to_vector("e").alias("features")
-            )
-            assigned = model.transform(vecs).withColumnRenamed("prediction", "cell")
-            return assigned.drop("features"), model
 
     vecs = em.select(
         "vec_id", "label", F.col("e"), array_to_vector("e").alias("features")
-    ).persist()  # fit sample + assignment re-scan; pin once
+    )
+    if cache_key is not None:
+        model = memo(
+            em.sparkSession, ("ivf", cache_key, n_cells, seed),
+            lambda: _fit_ivf(vecs, n_cells, seed),
+        )
+    else:
+        model = _fit_ivf(vecs, n_cells, seed)
+    assigned = model.transform(vecs).withColumnRenamed("prediction", "cell")
+    return assigned.drop("features"), model
+
+
+def _fit_ivf(vecs: DataFrame, n_cells: int, seed: int):
+    from pyspark.ml.clustering import KMeans
+
     # Fit the coarse quantizer on a BOUNDED, canonically-ordered,
     # single-partition sample (md5-ordered limit — same device as the PQ
     # codebook fit): k-means|| init samples per partition and float
@@ -220,6 +204,7 @@ def ivf_index(
     # any partitioning (asserted by test_rowsonly_fixed_seed_determinism)
     # and is also the 100 TB shape: n_cells × dim centroids never need
     # the full corpus, only a representative bounded sample.
+    vecs = vecs.persist()  # fit sample + assignment re-scan; pin once
     fit_sample = (
         vecs.select("vec_id", "features")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -230,11 +215,8 @@ def ivf_index(
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="features", maxIter=10
     ).fit(fit_sample)
-    assigned = model.transform(vecs).withColumnRenamed("prediction", "cell")
     vecs.unpersist()
-    if key is not None:
-        _IVF_MODEL_CACHE[key] = (spark, model)
-    return assigned.drop("features"), model
+    return model
 
 
 @register(
@@ -564,12 +546,18 @@ def semdedup_prune(
     cache_key: str | None = None,
 ) -> DataFrame:
     """Core SemDeDup pass over (vec_id, label, e) rows; see x29."""
-    assigned, _model = ivf_index(em, n_cells=n_cells, cache_key=cache_key)
+
+    def assign() -> DataFrame:
+        return ivf_index(em, n_cells=n_cells, cache_key=cache_key)[0]
+
     # the cell-assigned corpus feeds the pair join's both sides AND the
-    # final left-join base; unpersisted, the KMeans transform + embedding
-    # scan lineage would replay three times (LRU-evicted, caller-scoped —
-    # em is injectable so there is no (sf_dir, name) cache key to pin on)
-    assigned = assigned.persist()
+    # final left-join base; with a dataset identity it is pinned so the
+    # KMeans transform + embedding scan lineage is not replayed three times
+    assigned = (
+        assign() if cache_key is None else pin_derived(
+            em.sparkSession, cache_key, f"semdedup_cells{n_cells}", assign
+        )
+    )
     # per-row norms once, not per pair (cosine_prenorm — bit-identical)
     a = assigned.select(
         "cell", F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"),
@@ -770,8 +758,6 @@ def _x41_oracle() -> str:
     "buckets",
 )
 def x41_hyperplane_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.catalog import pin_derived
-
     em = fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
         "vec_id", _dbl("embedding").alias("e")
     )
@@ -846,7 +832,6 @@ def x41_hyperplane_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _label_dim_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned per-(label, dim) exact-decimal sum table shared by x48/x49."""
     from ..functions.numeric import dsum
-    from ..sources.catalog import pin_derived
 
     def build():
         em = fan_out(load_table(spark, sf_dir, "embeddings"), spark)
@@ -976,11 +961,6 @@ PQ_M = 16  # subspaces (64-dim embeddings -> 16 chunks of 4 dims)
 PQ_KS = 16  # centroids per subspace (4-bit codes)
 
 
-# Codebooks are pure numpy fitted from a deterministic bounded sample, so
-# the cache key needs only the dataset identity — no session binding.
-_PQ_BOOK_CACHE: dict[tuple, "object"] = {}
-
-
 def pq_codebooks(
     em: DataFrame,
     m: int = PQ_M,
@@ -998,11 +978,12 @@ def pq_codebooks(
     leaves the executors. Lloyd iterations run in numpy on the sample
     (deterministic seed, fixed iteration count — no convergence
     nondeterminism across machines)."""
+    if cache_key is not None:
+        return memo(
+            em.sparkSession, ("pq_books", cache_key, m, ks, seed),
+            lambda: pq_codebooks(em, m, ks, seed),
+        )
     import numpy as np
-
-    key = (cache_key, m, ks, seed) if cache_key is not None else None
-    if key is not None and key in _PQ_BOOK_CACHE:
-        return _PQ_BOOK_CACHE[key]
 
     sample_rows = (
         em.select("vec_id", "e")
@@ -1028,8 +1009,6 @@ def pq_codebooks(
                 if mask.any():
                     c[k] = xs[mask].mean(axis=0)
         books[j] = c
-    if key is not None:
-        _PQ_BOOK_CACHE[key] = books
     return books
 
 
@@ -1234,7 +1213,7 @@ def x60_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     wk = W.partitionBy("src").orderBy(
         F.desc("cos"), F.asc("dst")
     )
-    edges = (
+    knn = (
         a.join(b, "label")
         .filter(F.col("src") != F.col("dst"))
         .select(
@@ -1246,10 +1225,12 @@ def x60_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= PR_KNN)
         .select("src", "dst")
-        .persist()  # re-joined every iteration
     )
+    # re-joined every iteration: pinned, so each round reads the cached
+    # edge table instead of rebuilding it at the caller's action
+    edges = pin_derived(spark, sf_dir, "x60_knn_edges", lambda: knn)
     n = em.count()  # bounded driver scalar (graph size)
-    nodes = em.select("vec_id").persist()
+    nodes = em.select("vec_id")
     ranks = nodes.select("vec_id", (F.lit(1.0) / n).alias("r"))
     contrib = F.round(F.col("r") / PR_KNN, 12).cast("decimal(27,12)")
     for _ in range(PR_ITERS):
@@ -1273,10 +1254,7 @@ def x60_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # truncate lineage: without this the plan doubles per round
             .localCheckpoint(eager=False)
         )
-    out = ranks.select("vec_id", F.round("r", 9).alias("pagerank"))
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+    return ranks.select("vec_id", F.round("r", 9).alias("pagerank"))
 
 
 # --- x65: IVF+PQ composed ANN (coarse cells + code scan + exact rerank) ------
@@ -1347,8 +1325,6 @@ def ivfpq_exact_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the KMeans transform + encode mapInPandas per
     # invocation (ivf_index's build-once-serve-many contract; first use
     # per session still computes from parquet).
-    from ..sources.catalog import pin_derived
-
     code_df = pin_derived(
         spark,
         sf_dir,
@@ -2059,7 +2035,6 @@ def mutual_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     kNN edge build + label-propagation rounds at ~10 s per consumer,
     re-run identically by all three; same build-once-serve-many contract
     as ``ivf_index`` (first use per session computes from parquet)."""
-    from ..sources.catalog import pin_derived
     from .components import connected_components
 
     def build() -> DataFrame:

@@ -25,7 +25,7 @@ from ..functions.numeric import (
     sql_dsum,
 )
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, pin_derived
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -1082,7 +1082,6 @@ def a25_sketch_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         h.withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") <= KMV_K)
         .select("event_type", "hx")
-        .persist()  # consumed by the pair expansion twice (type list + rows)
     )
     types = sk.select("event_type").distinct()
     tp = (
@@ -1149,7 +1148,6 @@ def a25_sketch_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    sk.unpersist()
     return out
 
 
@@ -2646,10 +2644,11 @@ def a42_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("qx"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("dy"),
     )
-    cells = (
-        li.groupBy("qx", "dy")
-        .agg(F.count("*").cast("decimal(38,0)").alias("c"))
-        .persist()
+    cells = pin_derived(
+        spark, sf_dir, "a42_cells",
+        lambda: li.groupBy("qx", "dy").agg(
+            F.count("*").cast("decimal(38,0)").alias("c")
+        ),
     )
     a = cells.select(
         F.col("qx").alias("ax"), F.col("dy").alias("ay"),

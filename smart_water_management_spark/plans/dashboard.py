@@ -16,12 +16,10 @@ production the literal is current_date-relative (reference src/app.py:29).
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, memo
 
 CUTOFF = "TIMESTAMP '2024-01-24 00:00:00'"
 
@@ -30,41 +28,22 @@ CUTOFF = "TIMESTAMP '2024-01-24 00:00:00'"
 # SQL text every few seconds, and re-running analysis + optimization +
 # physical planning for an unchanged query is pure fixed cost (~0.3 s of
 # q05's wall at sf0.1). Memoizing the analyzed DataFrame per
-# (session, sf_dir, sql) reuses the plan the way a server-side prepared
-# statement would; every ACTION still re-executes against the live scan,
-# so results are never stale. Resolution happens once against
-# load_table's deterministic output, so later view overwrites by other
-# queries cannot leak into a memoized plan.
-_PLAN_MEMO: "OrderedDict[tuple[str, str, str], DataFrame]" = OrderedDict()
-# LRU bound: a DataFrame plan is cheap but not free (analyzed + resolved
-# logical plan held on the driver), and the memo is keyed by raw SQL text —
-# a long-lived session issuing varied ad-hoc SQL would otherwise grow it
-# without limit. 256 comfortably covers the 16-query dashboard suite times
-# every sf_dir used in one process while capping driver-side growth.
-_PLAN_MEMO_MAX = 256
-
-
+# (session, sf_dir, sql) in the session store reuses the plan the way a
+# server-side prepared statement would; every ACTION still re-executes
+# against the live scan, so results are never stale. Resolution happens
+# once against load_table's deterministic output, so later view
+# overwrites by other queries cannot leak into a memoized plan.
 def _sql(
     spark: SparkSession, sf_dir: str, sql: str, tables: list[str], setup=None
 ) -> DataFrame:
-    from ..registry import session_is_stopped
-    from ..sources.catalog import session_key
-
-    for k in [k for k, df in _PLAN_MEMO.items()
-              if session_is_stopped(df.sparkSession)]:
-        _PLAN_MEMO.pop(k)
-    key = (session_key(spark), sf_dir, sql)
-    if key not in _PLAN_MEMO:
+    def prepare() -> DataFrame:
         for t in tables:
             load_table(spark, sf_dir, t).createOrReplaceTempView(t)
         if setup is not None:
             setup()  # e.g. CREATE TEMP VIEW the memoized statement reads
-        _PLAN_MEMO[key] = spark.sql(sql)
-        while len(_PLAN_MEMO) > _PLAN_MEMO_MAX:
-            _PLAN_MEMO.popitem(last=False)
-    else:
-        _PLAN_MEMO.move_to_end(key)
-    return _PLAN_MEMO[key]
+        return spark.sql(sql)
+
+    return memo(spark, ("sql", sf_dir, sql), prepare)
 
 
 def _both(sql: str) -> str:

@@ -59,9 +59,8 @@ _POSTURE = os.environ.get("SWM_POSTURE", "auto")
 
 def session_is_stopped(spark: SparkSession) -> bool:
     """True when the session's SparkContext has been stopped — used by the
-    engine's driver-side caches (saved confs, persisted scans, fitted
-    models) to evict entries bound to dead contexts in long-lived driver
-    processes."""
+    session store (sources.catalog) and the saved confs below to evict
+    entries bound to dead contexts in long-lived driver processes."""
     try:
         return spark.sparkContext._jsc is None
     except Exception:

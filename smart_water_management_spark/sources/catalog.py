@@ -1,10 +1,29 @@
-"""Table catalog over the driver's parquet testdata.
+"""Table catalog over the driver's parquet testdata, and the session store.
 
 Mirrors the reference's source surface (SURVEY.md §2.1): explicit-schema
 scans, partitioned parquet sinks, and view registration so the dashboard
 SQL layer (§2.14) can run via ``spark.sql``. Parquet scans get predicate
 pushdown + column pruning from Catalyst for free; at 100 TB the same reads
 hit hive-partitioned directories and prune on year/month/day.
+
+Every piece of state the engine keeps between queries lives here, keyed
+by the session (``session_key``) and held by two devices:
+
+- ``memo(spark, key, build)`` — one LRU memo (``_PLAN_CACHE``, at most
+  ``_PLAN_CACHE_MAX`` entries) for driver-side objects built once per
+  session and served many times: analyzed scans, the dashboard's prepared
+  statements, fitted KMeans/IVF models, PQ codebooks, probed dtypes.
+  Nothing in it holds executor memory.
+- ``pin_derived(spark, sf_dir, name, build)`` — the only persist whose
+  frame outlives the function that made it. Pins live in ``_TABLE_CACHE``
+  next to the small-input posture's persisted base scans; ``_PIN_LRU``
+  orders them. A pin budget (``SWM_PIN_BUDGET_BYTES``) meters the pins'
+  own cached blocks and unpersists least-recently-used pins until they
+  fit; base scans and ``localCheckpoint`` blocks are not metered.
+
+Entries of a stopped session are dropped by one check
+(``_evict_dead_entries``), and ``clear_table_cache`` empties the current
+session's whole store: memo, pins and base scans.
 """
 
 from __future__ import annotations
@@ -28,28 +47,29 @@ TABLES = [
 ]
 
 
-# Shared-scan cache for the small-input posture: a correctness sweep or
-# benchmark suite runs hundreds of queries over the same ten MB-scale
-# tables, and re-decoding parquet per query is pure repeat cost when the
-# whole dataset fits in a fraction of executor memory. Entries are lazy
-# (`persist()` — materialized by each table's first action). Production
-# posture bypasses this entirely: at 100 TB you stream the scan, prune
-# columns/partitions, and never pin base tables.
+# Live sessions by key: the one place the store checks for a stopped
+# SparkContext, whose entries are then dropped wholesale.
+_SESSIONS: dict[str, SparkSession] = {}
+
+# The memo: (session, kind, ...) -> driver-side object, least recently
+# used first. Bounded because keys include caller data (SQL text, data
+# directories), which a long-lived driver can vary without limit.
+_PLAN_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
+_PLAN_CACHE_MAX = 256
+
+# Persisted frames: the small-input posture's base scans, keyed
+# (session, sf_dir, table), and derived pins, keyed
+# (session, sf_dir, "derived:<name>"). A correctness sweep or benchmark
+# suite runs hundreds of queries over the same ten MB-scale tables, and
+# re-decoding parquet per query is pure repeat cost when the dataset fits
+# in a fraction of executor memory. Entries are lazy (``persist()`` —
+# materialized by the first action). The production posture never pins
+# base tables: at 100 TB you stream the scan and prune.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
-# Plan-level memo used at EVERY posture: maps (session, sf_dir, table) to
-# the analyzed scan DataFrame. Unlike _TABLE_CACHE this never persists —
-# it only reuses the resolved file index + parquet footer schema, the same
-# thing a metastore catalog table provides, so repeated queries (a
-# dashboard refresh loop, a bench pass) skip ~80 ms of driver-side file
-# listing per table per call. Data still streams through the scan. The
-# testdata directories are read-only for the engine, so the resolved file
-# index cannot go stale mid-session (clear_table_cache evicts it anyway
-# for callers that rewrite a dir they previously scanned). LRU-bounded:
-# keys are (session, sf_dir, table), so a long-lived driver touching many
-# sf_dirs would otherwise accumulate analyzed plans without limit.
-_PLAN_CACHE: "OrderedDict[tuple[str, str, str], DataFrame]" = OrderedDict()
-_PLAN_CACHE_MAX = 256
+# LRU order of the derived pins — least recently used first. The pin
+# budget governs only these; base scans are a fixed, bounded set.
+_PIN_LRU: "OrderedDict[tuple[str, str, str], None]" = OrderedDict()
 
 
 def session_key(spark: SparkSession) -> str:
@@ -58,6 +78,55 @@ def session_key(spark: SparkSession) -> str:
     entries (whose lineage points at a dead SparkContext); the
     applicationId is unique per context."""
     return spark.sparkContext.applicationId
+
+
+def _session(spark: SparkSession) -> str:
+    """Key of a live session, after dropping every stopped one's entries."""
+    _evict_dead_entries()
+    sess = session_key(spark)
+    _SESSIONS[sess] = spark
+    return sess
+
+
+def _evict_dead_entries() -> None:
+    """Forget every entry of a session whose SparkContext has stopped:
+    its persisted blocks died with the context and its models and plans
+    are bound to it, and a long-lived driver that cycles sessions would
+    otherwise accumulate them forever."""
+    from ..registry import session_is_stopped
+
+    for sess in [s for s, sp in _SESSIONS.items() if session_is_stopped(sp)]:
+        del _SESSIONS[sess]
+        _drop_session(sess, unpersist=False)
+
+
+def _drop_session(sess: str, unpersist: bool) -> None:
+    for key in [k for k in _TABLE_CACHE if k[0] == sess]:
+        df = _TABLE_CACHE.pop(key)
+        _PIN_LRU.pop(key, None)
+        if unpersist:
+            df.unpersist()
+    for key in [k for k in _PLAN_CACHE if k[0] == sess]:
+        del _PLAN_CACHE[key]
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """``build()``'s result, built once per (session, *key) and reused.
+
+    ``key`` starts with a kind tag (``"scan"``, ``"sql"``, ``"kmeans"``…)
+    and holds everything the result depends on besides the session. Use
+    it for driver-side objects only — an analyzed DataFrame, a fitted
+    model, a numpy array; a frame whose blocks should stay resident is a
+    ``pin_derived`` instead. Every action on a memoized DataFrame still
+    re-executes against the live scan, so results are never stale."""
+    full = (_session(spark), *key)
+    if full in _PLAN_CACHE:
+        _PLAN_CACHE.move_to_end(full)
+        return _PLAN_CACHE[full]
+    value = _PLAN_CACHE[full] = build()
+    while len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
+        _PLAN_CACHE.popitem(last=False)
+    return value
 
 
 def normalize_event_ts(df: DataFrame):
@@ -102,42 +171,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from ..registry import small_input
 
-    _evict_dead_entries()
-    key = (session_key(spark), sf_dir, name)
     if not small_input(sf_dir):
-        if key not in _PLAN_CACHE:
-            _PLAN_CACHE[key] = _read_table(spark, sf_dir, name)
-            while len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-                _PLAN_CACHE.popitem(last=False)
-        else:
-            _PLAN_CACHE.move_to_end(key)
-        return _PLAN_CACHE[key]
+        # Reuse the resolved file index + parquet footer schema, the thing
+        # a metastore table provides: a dashboard refresh loop or a bench
+        # pass skips ~80 ms of driver-side file listing per table per call.
+        return memo(
+            spark, ("scan", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+        )
+    key = (_session(spark), sf_dir, name)
     if key not in _TABLE_CACHE:
         _TABLE_CACHE[key] = _read_table(spark, sf_dir, name).persist()
     return _TABLE_CACHE[key]
-
-
-def _evict_dead_entries() -> None:
-    """Drop cached scans whose SparkContext has been stopped — their
-    persisted blocks died with the context, and a long-lived driver that
-    cycles sessions would otherwise accumulate dead entries forever
-    (clear_table_cache only covers the CURRENT session's keys)."""
-    from ..registry import session_is_stopped
-
-    for key in [k for k, df in _TABLE_CACHE.items()
-                if session_is_stopped(df.sparkSession)]:
-        _TABLE_CACHE.pop(key)
-        _PIN_LRU.pop(key, None)
-    for key in [k for k, df in _PLAN_CACHE.items()
-                if session_is_stopped(df.sparkSession)]:
-        _PLAN_CACHE.pop(key)
-
-
-# LRU order of the derived pins (pin_derived) — least-recently-used first.
-# Governs ONLY derived pins; base-table scans under the small-input posture
-# are a fixed, bounded set (the ten MB-scale testdata tables) and are not
-# evicted by the budget.
-_PIN_LRU: "OrderedDict[tuple[str, str, str], None]" = OrderedDict()
 
 
 def _pin_budget_bytes() -> int:
@@ -150,80 +194,90 @@ def _pin_budget_bytes() -> int:
     return int(os.environ.get("SWM_PIN_BUDGET_BYTES", str(4 * 1024**3)))
 
 
-def _cached_bytes(spark: SparkSession) -> int:
-    """Total bytes currently materialized in the block manager (memory +
-    disk) across all persisted RDDs/DataFrames of this session. Lazy pins
-    that have not run an action yet report 0 — they hold no blocks."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return sum(i.memSize() + i.diskSize() for i in infos)
+def _pin_bytes(spark: SparkSession, pins: list, stored: dict) -> dict:
+    """Bytes of each pin's own materialized blocks, looked up in
+    ``stored`` (RDD id -> memory + disk bytes) through the columnar cache
+    buffers the CacheManager built for the pin. A pin that has run no
+    action holds nothing; an RDD two pins share is counted on the first
+    of them only; blocks no pin owns (base scans, ``localCheckpoint``
+    RDDs) are never counted."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    sizes, seen = {}, set()
+    for key in pins:
+        rdd = None
+        cached = cache_manager.lookupCachedData(_TABLE_CACHE[key]._jdf)
+        if cached.isDefined():
+            builder = cached.get().cachedRepresentation().cacheBuilder()
+            if builder.isCachedColumnBuffersLoaded():
+                rdd = builder.cachedColumnBuffers().id()
+        sizes[key] = 0 if rdd in seen else stored.get(rdd, 0)
+        seen.add(rdd)
+    return sizes
 
 
 def _enforce_pin_budget(spark: SparkSession, keep) -> None:
-    """Evict least-recently-used derived pins until the session's
-    materialized cache fits the budget (never the pin just requested).
-    Eviction is safe: a pinned frame is a pure function of the parquet
-    inputs, so consumers recompute on next use — the budget trades repeat
-    compute for bounded memory, exactly the 100 TB posture."""
+    """Unpersist least-recently-used pins of this session until the pins'
+    own bytes fit the budget (never ``keep``, the pin just requested).
+    Each victim is metered once and released with a blocking unpersist,
+    so the running total needs no re-poll. Eviction is safe: a pinned
+    frame is a pure function of the parquet inputs, so consumers
+    recompute on next use — repeat compute traded for bounded memory."""
     budget = _pin_budget_bytes()
+    stored = {
+        i.id(): i.memSize() + i.diskSize()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+    if sum(stored.values()) <= budget:
+        return  # everything cached fits, so the pins do too
     sess = session_key(spark)
-    while _cached_bytes(spark) > budget:
-        victim = next(
-            (k for k in _PIN_LRU if k[0] == sess and k != keep), None
-        )
-        if victim is None:
-            break  # nothing evictable left (base scans are not governed)
-        _PIN_LRU.pop(victim)
-        df = _TABLE_CACHE.pop(victim, None)
-        if df is not None:
-            df.unpersist()
+    pins = [k for k in _PIN_LRU if k[0] == sess]
+    sizes = _pin_bytes(spark, pins, stored)
+    total = sum(sizes.values())
+    for victim in pins:
+        if total <= budget:
+            break
+        if victim == keep or not sizes[victim]:
+            continue  # an unmaterialized pin frees nothing
+        total -= sizes[victim]
+        del _PIN_LRU[victim]
+        _TABLE_CACHE.pop(victim).unpersist(blocking=True)
 
 
-def pin_derived(
-    spark: SparkSession, sf_dir: str, name: str, build, storage_level=None
-) -> DataFrame:
+def pin_derived(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     """Persist-and-track a derived table (e.g. an exploded n-gram table
-    consumed by both sides of a self-join). Registering the pin here —
-    instead of a bare ``.persist()`` at the call site — means repeated
-    invocations reuse ONE cached copy rather than pinning a fresh one per
-    sweep, and ``clear_table_cache`` / dead-session eviction release it.
+    consumed by both sides of a self-join), built by ``build()`` once per
+    (session, sf_dir, name). This is the engine's only persist whose frame
+    outlives its function: repeated invocations reuse ONE cached copy
+    rather than pinning a fresh one per call, the budget can evict it,
+    and ``clear_table_cache`` / dead-session eviction release it.
 
-    r12: pins are budgeted (``SWM_PIN_BUDGET_BYTES``, default 4 GiB) with
-    LRU eviction across the session's derived pins, and callers may pass
-    an explicit ``storage_level`` (default MEMORY_AND_DISK via
-    ``persist()`` — spills instead of OOMing when a pin outgrows memory).
-    The budget check runs on each pin call against the block manager's
-    real materialized bytes; a lazy pin costs nothing until its first
-    action, so enforcement naturally follows materialization order."""
-    _evict_dead_entries()
-    key = (session_key(spark), sf_dir, f"derived:{name}")
-    if key not in _TABLE_CACHE:
-        built = build()
-        _TABLE_CACHE[key] = (
-            built.persist(storage_level) if storage_level else built.persist()
-        )
-        _PIN_LRU[key] = None
-        _enforce_pin_budget(spark, keep=key)
-    elif key in _PIN_LRU:
+    The pin is lazy (``persist()``, MEMORY_AND_DISK — spills instead of
+    OOMing when a pin outgrows memory) and costs nothing until its first
+    action; the budget check runs on each new pin against the pins' real
+    materialized bytes, so enforcement follows materialization order."""
+    key = (_session(spark), sf_dir, f"derived:{name}")
+    if key in _PIN_LRU:
         _PIN_LRU.move_to_end(key)
+        return _TABLE_CACHE[key]
+    _TABLE_CACHE[key] = build().persist()
+    _PIN_LRU[key] = None
+    _enforce_pin_budget(spark, keep=key)
     return _TABLE_CACHE[key]
 
 
 def clear_table_cache(spark: SparkSession) -> None:
-    """Unpersist and forget every shared-scan cache entry.
+    """Empty the session's whole store: unpersist its pins and base scans
+    and forget its memo (analyzed scans, prepared statements, fitted
+    models).
 
     Needed before plan inspection under the production posture: Spark's
     CacheManager substitutes InMemoryRelation into ANY plan that matches
     a cached fragment, so a lingering cached scan would hide the
-    pushdown/pruning behavior the physical-plan CI asserts. Also evicts
-    the session's memoized analyzed scans (_PLAN_CACHE, the non-small
-    posture path) so a "cleared" session re-resolves the file index —
-    without this, a table dir rewritten after first load would keep
-    serving the stale resolved listing."""
-    for key in [k for k in _TABLE_CACHE if k[0] == session_key(spark)]:
-        _TABLE_CACHE.pop(key).unpersist()
-        _PIN_LRU.pop(key, None)
-    for key in [k for k in _PLAN_CACHE if k[0] == session_key(spark)]:
-        _PLAN_CACHE.pop(key)
+    pushdown/pruning behavior the physical-plan CI asserts. Dropping the
+    memoized scans makes a "cleared" session re-resolve the file index,
+    so a table dir rewritten after first load is read afresh; dropping
+    the models makes the next query refit them."""
+    _drop_session(session_key(spark), unpersist=True)
 
 
 def literal_df(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -43,15 +43,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..registry import get, register, session_is_stopped
+from ..registry import get, register
 
 _DEC = "decimal(27,6)"
 _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-# (applicationId, sf_dir) -> (session, ts dtype) probed from the events
-# parquet footer; the session is stored to make liveness checkable for
-# eviction (same pattern as registry._SAVED_CONF).
-_TS_DTYPE_CACHE: dict[tuple[str, str], tuple[SparkSession, object]] = {}
 
 # Events schema as the streaming source sees it. ``ts``'s declared type
 # depends on the generator's parquet physical type: TIMESTAMP(NANOS) files
@@ -114,19 +109,16 @@ def _file_stream(
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: file-source stream over the events table (replay semantics)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from ..sources.catalog import normalize_event_ts
+    from ..sources.catalog import memo, normalize_event_ts
 
     # Footer-only batch read to learn the physical ts type (bigint = NANOS
     # via the legacy flag, timestamp_ntz = MICROS) — no data scan, but
-    # still a parquet metadata round-trip per call, so cache the dtype per
-    # (session, sf_dir): t12 alone builds two streams over the same table.
-    for key in [k for k, (sess, _) in _TS_DTYPE_CACHE.items() if session_is_stopped(sess)]:
-        _TS_DTYPE_CACHE.pop(key)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _TS_DTYPE_CACHE:
-        probe = spark.read.parquet(f"{sf_dir}/events.parquet")
-        _TS_DTYPE_CACHE[cache_key] = (spark, probe.schema["ts"].dataType)
-    ts_dtype = _TS_DTYPE_CACHE[cache_key][1]
+    # still a parquet metadata round-trip per call, so memoize the dtype
+    # per (session, sf_dir): t12 alone builds two streams over the table.
+    ts_dtype = memo(
+        spark, ("events_ts_dtype", sf_dir),
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType,
+    )
     raw = _file_stream(spark, sf_dir, "events", _raw_schema(ts_dtype))
     return raw.withColumn("ts", normalize_event_ts(raw))
 

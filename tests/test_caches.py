@@ -1,11 +1,17 @@
-"""Driver-side cache hygiene: the table/plan caches in sources.catalog and
-the prepared-statement memo in plans.dashboard must stay bounded and must
-actually empty when a caller clears them (VERDICT r5 ADVICE items)."""
+"""Driver-side cache hygiene: the session store in sources.catalog — the
+memo (analyzed scans, prepared statements, fitted models), the derived
+pins and their byte budget — must stay bounded, must meter what it
+claims to, and must actually empty when a caller clears it."""
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+
 from smart_water_management_spark.plans import dashboard
 from smart_water_management_spark.sources import catalog
+
+from .conftest import SF_DIR
 
 
 def test_clear_table_cache_evicts_plan_cache_too(spark):
@@ -20,22 +26,6 @@ def test_clear_table_cache_evicts_plan_cache_too(spark):
     catalog.clear_table_cache(spark)
     assert key not in catalog._PLAN_CACHE
     assert not [k for k in catalog._TABLE_CACHE if k[0] == key[0]]
-
-
-def test_plan_memo_is_lru_bounded(spark):
-    """The dashboard prepared-statement memo is keyed by raw SQL text; a
-    session issuing varied ad-hoc SQL must not grow it without limit."""
-    dashboard._PLAN_MEMO.clear()
-    for i in range(dashboard._PLAN_MEMO_MAX + 32):
-        dashboard._sql(
-            spark, "/root/testdata/sf0.001", f"SELECT {i} AS v", tables=[]
-        )
-    assert len(dashboard._PLAN_MEMO) == dashboard._PLAN_MEMO_MAX
-    # Most-recent entries survive; the earliest were evicted first.
-    sqls = {k[2] for k in dashboard._PLAN_MEMO}
-    assert f"SELECT {dashboard._PLAN_MEMO_MAX + 31} AS v" in sqls
-    assert "SELECT 0 AS v" not in sqls
-    dashboard._PLAN_MEMO.clear()
 
 
 def test_pin_derived_budget_evicts_lru(spark, monkeypatch):
@@ -76,10 +66,13 @@ def test_pin_derived_budget_evicts_lru(spark, monkeypatch):
 
 
 def test_plan_cache_is_lru_bounded(spark, monkeypatch):
-    """_PLAN_CACHE is keyed by (session, sf_dir, table); many tables/dirs in
-    one long-lived driver must not accumulate analyzed plans without limit.
-    Exercises the real load_table population path under the production
-    posture (the branch that memoizes plans instead of persisting)."""
+    """The memo is keyed by caller data — (session, sf_dir, table) for
+    analyzed scans, (session, sf_dir, sql) for the dashboard's prepared
+    statements — so one long-lived driver touching many tables, dirs or
+    ad-hoc SQL texts must not accumulate entries without limit. Both
+    inputs go through the real population paths (load_table under the
+    production posture, the branch that memoizes instead of persisting;
+    dashboard._sql) and share the one LRU bound."""
     from smart_water_management_spark import registry
 
     catalog._PLAN_CACHE.clear()
@@ -88,14 +81,139 @@ def test_plan_cache_is_lru_bounded(spark, monkeypatch):
     try:
         for name in ["region", "nation", "customer", "supplier", "part",
                      "orders", "lineitem"]:
-            catalog.load_table(spark, "/root/testdata/sf0.001", name)
+            catalog.load_table(spark, SF_DIR, name)
         assert len(catalog._PLAN_CACHE) == 4
         # LRU: the most recently loaded tables survive.
-        kept = {k[2] for k in catalog._PLAN_CACHE}
+        kept = {k[-1] for k in catalog._PLAN_CACHE}
         assert kept == {"part", "orders", "lineitem", "supplier"}
+
+        for i in range(7):
+            dashboard._sql(spark, SF_DIR, f"SELECT {i} AS v", tables=[])
+        assert len(catalog._PLAN_CACHE) == 4
+        kept = {k[-1] for k in catalog._PLAN_CACHE}
+        assert kept == {f"SELECT {i} AS v" for i in range(3, 7)}
     finally:
         registry.set_posture("auto")
         catalog._PLAN_CACHE.clear()
+
+
+def _stored_bytes(spark) -> dict[int, int]:
+    return {
+        i.id(): i.memSize() + i.diskSize()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+
+
+def _pin(spark, name: str, rows: int, k: int) -> DataFrame:
+    df = catalog.pin_derived(
+        spark, "/budget-test", name,
+        lambda: spark.range(rows).selectExpr("id", f"id * {k} AS v"),
+    )
+    df.count()  # materialize the pin's blocks
+    return df
+
+
+def test_pin_budget_ignores_resident_checkpoint(spark, monkeypatch):
+    """The budget meters the pins' own blocks only. A resident
+    localCheckpoint larger than the whole budget holds blocks no pin owns
+    and the budget cannot evict; counting it made every new pin evict
+    every older one. Pins whose own bytes fit must all stay."""
+    catalog.clear_table_cache(spark)
+    budget = 1_000_000
+    before = set(_stored_bytes(spark))
+    checkpoint = spark.range(50_000).selectExpr("id", "id * 3 AS w").localCheckpoint()
+    checkpoint_rdds = set(_stored_bytes(spark)) - before
+    assert sum(_stored_bytes(spark)[i] for i in checkpoint_rdds) > budget
+    monkeypatch.setenv("SWM_PIN_BUDGET_BYTES", str(budget))
+    try:
+        pins = [_pin(spark, f"small_{i}", 100, i + 2) for i in range(3)]
+        catalog.pin_derived(spark, "/budget-test", "small_new", lambda: spark.range(5))
+        sess = catalog.session_key(spark)
+        for i, df in enumerate(pins):
+            assert (sess, "/budget-test", f"derived:small_{i}") in catalog._PIN_LRU
+            assert df.storageLevel != StorageLevel.NONE
+        assert checkpoint.count() == 50_000
+    finally:
+        catalog.clear_table_cache(spark)
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
+        for rdd_id in checkpoint_rdds:
+            persistent.get(rdd_id).unpersist(True)
+
+
+def test_pin_budget_evicts_exactly_the_lru_pins(spark, monkeypatch):
+    """With pins over the budget, the least-recently-used materialized
+    pins — by use, not by creation — are evicted until the pins fit: each
+    victim once, with its blocks gone (storageLevel NONE) when the call
+    returns. Nothing else is touched: not a resident cached frame that is
+    no pin (a base scan, a query-scoped persist), not an older pin that
+    has run no action (it frees nothing)."""
+    catalog.clear_table_cache(spark)
+    sess = catalog.session_key(spark)
+    resident = spark.range(30_000).selectExpr("id", "id * 7 AS w").persist()
+    resident.count()
+    try:
+        lazy = catalog.pin_derived(
+            spark, "/budget-test", "lru_lazy", lambda: spark.range(7)
+        )
+        before = set(_stored_bytes(spark))
+        a = _pin(spark, "lru_a", 20_000, 2)
+        one_pin = sum(v for i, v in _stored_bytes(spark).items() if i not in before)
+        b = _pin(spark, "lru_b", 20_000, 3)
+        c = _pin(spark, "lru_c", 20_000, 5)
+        assert catalog.pin_derived(spark, "/budget-test", "lru_a", None) is a
+        # LRU order is now b, c, a: three pins over a 2.5-pin budget must
+        # lose b and nothing else
+        monkeypatch.setenv("SWM_PIN_BUDGET_BYTES", str(int(2.5 * one_pin)))
+        unpersisted = []
+        frame_type = type(b)  # the concrete (classic) DataFrame class
+        real_unpersist = frame_type.unpersist
+
+        def counting_unpersist(self, blocking=False):
+            unpersisted.append(self)
+            return real_unpersist(self, blocking)
+
+        monkeypatch.setattr(frame_type, "unpersist", counting_unpersist)
+        catalog.pin_derived(spark, "/budget-test", "lru_d", lambda: spark.range(5))
+        monkeypatch.setattr(frame_type, "unpersist", real_unpersist)
+        assert unpersisted == [b]
+        assert b.storageLevel == StorageLevel.NONE
+        assert (sess, "/budget-test", "derived:lru_b") not in catalog._PIN_LRU
+        assert resident.storageLevel != StorageLevel.NONE
+        for name, df in (("lru_lazy", lazy), ("lru_a", a), ("lru_c", c)):
+            assert (sess, "/budget-test", f"derived:{name}") in catalog._PIN_LRU
+            assert df.storageLevel != StorageLevel.NONE
+    finally:
+        catalog.clear_table_cache(spark)
+        resident.unpersist()
+
+
+def test_clear_table_cache_drops_memoized_plans_and_models(spark):
+    """clear_table_cache empties the session's whole store: the next call
+    re-prepares the dashboard statement and refits the KMeans model, the
+    IVF coarse quantizer and the PQ codebooks instead of serving the
+    memoized ones."""
+    from smart_water_management_spark.llmdata import similarity
+    from smart_water_management_spark.ml import analytics
+
+    em = catalog.load_table(spark, SF_DIR, "embeddings").select(
+        "vec_id", "label", similarity._dbl("embedding").alias("e")
+    )
+
+    def served():
+        return (
+            dashboard._sql(spark, SF_DIR, dashboard._Q1, ["events"]),
+            analytics._cached_kmeans(spark, SF_DIR)[0],
+            similarity.ivf_index(em, cache_key=SF_DIR)[1],
+            similarity.pq_codebooks(em, cache_key=SF_DIR),
+        )
+
+    first = served()
+    assert all(x is y for x, y in zip(first, served()))
+    catalog.clear_table_cache(spark)
+    after = served()
+    for x, y in zip(first, after):
+        assert x is not y
+    catalog.clear_table_cache(spark)
 
 
 def test_fan_out_guard_without_rdd_at_scale(spark):
