@@ -97,6 +97,23 @@ def test_plan_cache_is_lru_bounded(spark, monkeypatch):
         catalog._PLAN_CACHE.clear()
 
 
+def test_plan_memo_is_lru_bounded(spark):
+    """The dashboard's prepared statements are memoized by raw SQL text; a
+    session issuing varied ad-hoc SQL must not grow the memo without
+    limit, at its real bound."""
+    catalog._PLAN_CACHE.clear()
+    try:
+        for i in range(catalog._PLAN_CACHE_MAX + 32):
+            dashboard._sql(spark, SF_DIR, f"SELECT {i} AS v", tables=[])
+        assert len(catalog._PLAN_CACHE) == catalog._PLAN_CACHE_MAX
+        # Most-recent entries survive; the earliest were evicted first.
+        sqls = {k[-1] for k in catalog._PLAN_CACHE if k[1] == "sql"}
+        assert f"SELECT {catalog._PLAN_CACHE_MAX + 31} AS v" in sqls
+        assert "SELECT 0 AS v" not in sqls
+    finally:
+        catalog._PLAN_CACHE.clear()
+
+
 def _stored_bytes(spark) -> dict[int, int]:
     return {
         i.id(): i.memSize() + i.diskSize()
